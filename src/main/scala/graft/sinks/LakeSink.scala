@@ -48,11 +48,16 @@ object LakeSink {
 
   /** Idempotent micro-batch apply (exposed for direct testing): stamp
     * the batch id, dynamic-overwrite the (date, batch) cells it carries.
+    * The id is stamped as a string literal, which generated code takes
+    * by reference, so every batch reuses the classes the first one
+    * compiled (a Long literal is inlined into the Java source and
+    * compiles anew per batch). The `batch_id=N` directory, and the type
+    * a reader infers from it, are the same either way.
     */
   def applyBatch(df: DataFrame, batchId: Long, path: String,
                  dateCol: String): Unit =
     Sinks.overwritePartitions(
-      df.withColumn("batch_id", lit(batchId)), s"$path/open",
+      df.withColumn("batch_id", lit(batchId.toString)), s"$path/open",
       dateCol, "batch_id")
 
   /** Start the streaming feed. `df` must carry `dateCol`. Stateless or

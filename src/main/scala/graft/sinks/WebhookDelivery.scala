@@ -36,11 +36,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     the receiving side dedups on in both cases (the same composition
   *     contract as WebhookSource + StreamOps.dedup on the ingest side).
   *
-  * Scale shape: delivery runs inside `mapPartitions` — one HTTP client
-  * per task, rows stream through without driver collection, parallelism
-  * = the upstream partitioning. The replay guard reads ONE batch_id
-  * partition of the ledger (directory-pruned), so the anti-join cost
-  * tracks the batch being replayed, never ledger lifetime. Backoff
+  * Scale shape: delivery runs inside `mapPartitions` — rows stream
+  * through without driver collection, parallelism = the upstream
+  * partitioning, and every task posts through the one HTTP client its
+  * JVM keeps per endpoint (see [[client]]). A batch that settles for the
+  * first time costs ONE Spark job, the ledger write that carries the
+  * POSTs: the replay guard is a single existence check of the batch's
+  * own `batch_id=N` directory, and only a replayed batch reads that one
+  * directory for the anti-join — never the rest of the ledger. Backoff
   * sleeps occupy only the delivering task.
   */
 object WebhookDelivery {
@@ -129,6 +132,20 @@ object WebhookDelivery {
   def resetBreaker(endpoint: Option[String] = None): Unit =
     endpoint.fold(governors.clear())(e => { governors.remove(e); () })
 
+  private val clients =
+    new java.util.concurrent.ConcurrentHashMap[String, java.net.http.HttpClient]()
+
+  /** The HTTP client of `endpoint` in this JVM, shared by every task of
+    * every batch like [[Governor]]: a client owns a connection pool and
+    * a selector thread, so one per task paid a new client and a new TCP
+    * connection per task per batch. Bounded: one per endpoint this JVM
+    * delivers to.
+    */
+  private def client(endpoint: String): java.net.http.HttpClient =
+    clients.computeIfAbsent(endpoint, _ =>
+      java.net.http.HttpClient.newBuilder()
+        .connectTimeout(java.time.Duration.ofSeconds(5)).build())
+
   /** Deliver one micro-batch (or any DataFrame) to `endpoint`.
     * Returns (delivered, deadLettered) counts observed on the ledger
     * write itself — one evaluation, one pass.
@@ -159,18 +176,15 @@ object WebhookDelivery {
                                 cooldownMs: Long = 30000L): (Long, Long) = {
     val spark = payloads.sparkSession
     import spark.implicits._
-    // empty micro-batches settle as a no-op: writing them would leave a
-    // schemaless ledger directory (just _SUCCESS) that wedges every
-    // later replay-guard read, and there is nothing to guard anyway
-    if (payloads.isEmpty) return (0L, 0L)
     // replay guard: keys this batch already settled (either way) never
-    // reach the endpoint again
+    // reach the endpoint again. An empty batch needs no check of its
+    // own: its write below creates no batch_id=N directory, so it
+    // settles as a no-op and a later guard never reads it
     val todo = settledKeys(spark, ledgerPath, batchId)
       .fold(payloads)(done =>
         payloads.join(done, Seq("key"), "left_anti"))
     val results = todo.as[(Long, String)].mapPartitions { it =>
-      val client = java.net.http.HttpClient.newBuilder()
-        .connectTimeout(java.time.Duration.ofSeconds(5)).build()
+      val http = client(endpoint)
       val gov = governor(endpoint, maxInFlight, tripAfter, cooldownMs)
       it.map { case (key, body) =>
         var attempt = 0
@@ -192,7 +206,7 @@ object WebhookDelivery {
                 .header("X-Delivery-Key", s"$batchId:$key")
                 .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
                 .build()
-              val resp = gov.withSlot(client.send(req,
+              val resp = gov.withSlot(http.send(req,
                 java.net.http.HttpResponse.BodyHandlers.ofString()))
               if (resp.statusCode() / 100 == 2) ok = true
               else err = s"http ${resp.statusCode()}"
@@ -212,7 +226,9 @@ object WebhookDelivery {
     // ONE action settles the batch: the POSTs happen while the ledger
     // partition writes, with the outcome counts riding the same job
     // (Retention.curateObserved idiom — no second evaluation, which
-    // would re-POST every row)
+    // would re-POST every row). The batch id is a string literal for the
+    // reason LakeSink.applyBatch gives: each batch reuses the generated
+    // classes; the ledger schema still reads batch_id=N back as a Long.
     val obs = new org.apache.spark.sql.Observation()
     results.toDF()
       .observe(obs,
@@ -220,7 +236,7 @@ object WebhookDelivery {
           .as("n_delivered"),
         sum(when(col("status") === "dead", 1L).otherwise(0L))
           .as("n_dead"))
-      .withColumn("batch_id", lit(batchId))
+      .withColumn("batch_id", lit(batchId.toString))
       .write.mode("append").partitionBy("batch_id").parquet(ledgerPath)
     def n(k: String): Long = obs.get(k) match {
       case null => 0L
@@ -310,20 +326,21 @@ object WebhookDelivery {
   def ledger(spark: SparkSession, ledgerPath: String): DataFrame =
     spark.read.schema(LedgerSchema).parquet(ledgerPath)
 
-  /** Settled keys of one batch partition, if the ledger exists yet.
-    * The batch_id equality prunes to one directory of the hive layout.
-    * Existence goes through the Hadoop FileSystem of the path — a
-    * java.io.File check would answer false for every object-store /
-    * HDFS ledger and silently disable the replay guard (re-delivering
-    * the whole batch), exactly where a production deploy keeps it.
+  /** Settled keys of one batch, if that batch has a ledger directory.
+    * Only `batch_id=N` itself is checked and read: a read of the ledger
+    * root filtered on batch_id would first list every batch directory
+    * the ledger ever got, so a first-time batch would pay for the
+    * ledger's lifetime. Existence goes through the Hadoop FileSystem of
+    * the path — a java.io.File check would answer false for every
+    * object-store / HDFS ledger and silently disable the replay guard
+    * (re-delivering the whole batch), exactly where a production deploy
+    * keeps it.
     */
   private def settledKeys(spark: SparkSession, ledgerPath: String,
                           batchId: Long): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(ledgerPath)
+    val p = new org.apache.hadoop.fs.Path(s"$ledgerPath/batch_id=$batchId")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
-    else Some(ledger(spark, ledgerPath)
-      .filter(col("batch_id") === batchId)
-      .select(col("key")))
+    else Some(spark.read.schema("key LONG").parquet(p.toString))
   }
 }

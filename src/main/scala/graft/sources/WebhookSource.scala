@@ -289,6 +289,15 @@ object WebhookQueue {
 
   def latest: Long = synchronized { seq.get() }
 
+  /** The highest sequence number no longer retained: every entry above it
+    * is still in the queue. A fresh reader starts here — starting at 0
+    * would make a rows-capped stream walk the truncated ranges one empty
+    * micro-batch at a time before it reached its data.
+    */
+  def floor: Long = synchronized {
+    if (buf.isEmpty) seq.get() else buf.firstKey() - 1
+  }
+
   def slice(fromExclusive: Long, toInclusive: Long)
   : Array[(Long, Long, String, String, String)] =
     // iterator, not entrySet().asScala: mapping the Set wrapper rebuilds a
@@ -360,8 +369,16 @@ object WebhookQueue {
     buf.clear(); retained.set(0); committedBy.clear()
   }
 
+  /** Start the front door on `port` (0 = any free port); returns the
+    * port. Unless the JVM says otherwise, the server's sockets get
+    * TCP_NODELAY: without it each response's body segment waits for the
+    * client's delayed ACK, ~40 ms per request on a keep-alive connection.
+    * The JDK reads the property once, when its first HttpServer starts.
+    */
   def startServer(port: Int): Int = synchronized {
     if (server == null) {
+      if (System.getProperty("sun.net.httpserver.nodelay") == null)
+        System.setProperty("sun.net.httpserver.nodelay", "true")
       server = HttpServer.create(new java.net.InetSocketAddress(port), 0)
       server.createContext("/webhook", new HttpHandler {
         override def handle(x: HttpExchange): Unit = {
@@ -488,7 +505,13 @@ class WebhookMicroBatchStream(maxRows: Option[Long] = None,
     scala.util.Try(org.apache.spark.sql.SparkSession.active
       .conf.get("spark.sql.shuffle.partitions", "32").toInt).getOrElse(32))
 
-  override def initialOffset(): Offset = WebhookOffset(0L)
+  // fixed on first use, so every caller within this query sees one start
+  private lazy val initial = WebhookOffset(WebhookQueue.floor)
+
+  /** A fresh query starts at the queue's retained floor: the entries below
+    * it are gone, and batches over their ranges would all be empty.
+    */
+  override def initialOffset(): Offset = initial
   override def latestOffset(): Offset = WebhookOffset(WebhookQueue.latest)
   override def deserializeOffset(json: String): Offset =
     WebhookOffset("""\d+""".r.findFirstIn(json).map(_.toLong).getOrElse(0L))

@@ -582,12 +582,14 @@ class SinksSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_deliver_empty").toString
     val ledger = s"$dir/ledger"
     val endpoint = s"http://localhost:$port/webhook/out"
-    // an EMPTY micro-batch settles FIRST: before the fix this wrote a
-    // schemaless ledger dir (only _SUCCESS) and every later replay-guard
-    // read threw "unable to infer schema", wedging the stream
+    // an EMPTY micro-batch settles FIRST: it leaves a ledger root with no
+    // data files (only _SUCCESS), on which a schema-inferring read threw
+    // "unable to infer schema" and wedged the stream
     val empty = Tables(spark, sfTest, "events").limit(0)
     assert(WebhookDelivery.deliverBatch(empty, 1L, endpoint, "event_id",
       ledger) == ((0L, 0L)))
+    assert(!new java.io.File(s"$ledger/batch_id=1").exists,
+      "an empty batch wrote a batch directory for the replay guard to read")
     val before = WebhookQueue.latest
     val rows = Tables(spark, sfTest, "events").orderBy($"event_id").limit(3)
     assert(WebhookDelivery.deliverBatch(rows, 2L, endpoint, "event_id",
@@ -595,6 +597,120 @@ class SinksSpec extends SparkSpec {
     assert(WebhookQueue.latest == before + 3)
     // and the explicit-schema ledger read works on the settled state
     assert(WebhookDelivery.ledger(spark, ledger).count() == 3)
+    WebhookQueue.clear()
+  }
+
+  /** Spark jobs and generated-class compiles that `f` causes. Jobs are
+    * counted on a job group of their own, so a straggling job of an
+    * earlier spec cannot leak into the count.
+    */
+  private def costOf(f: => Unit): (Int, Long) = {
+    val sc = spark.sparkContext
+    val group = s"cost-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    val compiled =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    sc.addSparkListener(listener)
+    try {
+      val c0 = compiled.getCount
+      sc.setJobGroup(group, group)
+      try f finally sc.clearJobGroup()
+      val compiles = compiled.getCount - c0
+      org.apache.spark.ListenerBusDrain(sc)
+      (jobs.get(), compiles)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a new delivery batch settles in one Spark job and compiles no " +
+    "new classes") {
+    import spark.implicits._
+    import graft.sources.WebhookQueue
+    val port = WebhookQueue.startServer(0)
+    WebhookQueue.clear()
+    val dir = Files.createTempDirectory("graft_deliver_cost").toString
+    val ledger = s"$dir/ledger"
+    val endpoint = s"http://localhost:$port/webhook/out"
+    // an RDD-backed input, like a micro-batch: a local relation would let
+    // the optimizer fold the projections away and answer an emptiness
+    // check without a job, hiding both costs this spec counts
+    val rows = spark.sparkContext
+      .parallelize(Seq((1L, "view", 1.0), (2L, "click", 2.0),
+        (3L, "view", 3.0)), 2)
+      .toDF("event_id", "event_type", "value")
+    // the first batch compiles the plan's classes and creates the ledger
+    assert(WebhookDelivery.deliverBatch(rows, 1L, endpoint, "event_id",
+      ledger) == ((3L, 0L)))
+    val before = WebhookQueue.latest
+    val (jobs, compiles) = costOf {
+      assert(WebhookDelivery.deliverBatch(rows, 2L, endpoint, "event_id",
+        ledger) == ((3L, 0L)))
+    }
+    assert(WebhookQueue.latest == before + 3)
+    // the ledger write carries the POSTs; the replay guard of a batch
+    // with no ledger directory yet reads nothing
+    assert(jobs == 1, s"a new delivery batch ran $jobs Spark jobs")
+    assert(compiles == 0, s"a new delivery batch compiled $compiles classes")
+    WebhookQueue.clear()
+  }
+
+  test("a new lake batch applies in one Spark job and compiles no new " +
+    "classes") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_lake_cost").toString
+    // RDD-backed, like a micro-batch (see the delivery spec above)
+    val df = spark.sparkContext
+      .parallelize(Seq((1L, "2024-01-01"), (2L, "2024-01-02")), 2)
+      .toDF("id", "d").withColumn("date", to_date($"d")).drop("d")
+    LakeSink.applyBatch(df, 1L, dir, "date")
+    val (jobs, compiles) = costOf(LakeSink.applyBatch(df, 2L, dir, "date"))
+    assert(jobs == 1, s"a new lake batch ran $jobs Spark jobs")
+    assert(compiles == 0, s"a new lake batch compiled $compiles classes")
+    // the batch_id=N layout and the integral type read back from it
+    assert(new java.io.File(s"$dir/open/date=2024-01-02/batch_id=2")
+      .isDirectory)
+    val open = spark.read.parquet(s"$dir/open")
+    assert(Seq(org.apache.spark.sql.types.IntegerType,
+      org.apache.spark.sql.types.LongType)
+      .contains(open.schema("batch_id").dataType))
+    assert(open.select($"id", $"batch_id".cast("long")).as[(Long, Long)]
+      .collect().sorted.toSeq == Seq((1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L)))
+    assert(LakeSink.read(spark, dir, "date").count() == 4)
+  }
+
+  test("the replay guard reads only the replayed batch's own ledger " +
+    "directory: other batches never suppress a delivery") {
+    import spark.implicits._
+    import graft.sources.WebhookQueue
+    val port = WebhookQueue.startServer(0)
+    WebhookQueue.clear()
+    val dir = Files.createTempDirectory("graft_deliver_guard").toString
+    val ledger = s"$dir/ledger"
+    val endpoint = s"http://localhost:$port/webhook/out"
+    def rows(ids: Long*) = ids.map(i => (i, "view", i.toDouble))
+      .toDF("event_id", "event_type", "value")
+    def deliver(batch: Long, ids: Long*): (Long, Long) =
+      WebhookDelivery.deliverBatch(rows(ids: _*), batch, endpoint,
+        "event_id", ledger)
+    assert(deliver(1L, 1L, 2L, 3L) == ((3L, 0L)))
+    assert(deliver(2L, 1L, 2L, 3L) == ((3L, 0L)))
+    // a new batch over keys the ledger holds under OTHER batches: every
+    // row is a delivery of its own
+    val before = WebhookQueue.latest
+    assert(deliver(3L, 1L, 2L, 3L, 4L, 5L) == ((5L, 0L)))
+    assert(WebhookQueue.latest == before + 5)
+    // a replay of batch 2 that carries one more key posts only that key
+    assert(deliver(2L, 1L, 2L, 3L, 4L) == ((1L, 0L)))
+    assert(WebhookQueue.latest == before + 6)
+    val byBatch = WebhookDelivery.ledger(spark, ledger)
+      .groupBy("batch_id").count().as[(Long, Long)].collect().toMap
+    assert(byBatch == Map(1L -> 3L, 2L -> 4L, 3L -> 5L))
     WebhookQueue.clear()
   }
 

@@ -72,6 +72,17 @@ def main():
         print("behaviors:    %d table rows vs %d declared%s"
               % (rows, declared, "" if bok else "  MISMATCH"))
         ok = bok and ok
+        # README's surface line states the same two counts in prose
+        readme = open(os.path.join(ROOT, "README.md")).read()
+        m = re.search(r"\((\d+) queries in `graft\.SparkEntry\.queries`;"
+                      r"\s+(\d+) carry", readme)
+        rok = bool(m) and (int(m.group(1)), int(m.group(2))) == (
+            c["queries"], c["oracle"])
+        print("README.md    %s"
+              % ("%s/%s queries/oracle" % m.groups() if m
+                 else "carries no query count line")
+              + ("" if rok else "  MISMATCH"))
+        ok = rok and ok
         ok = check_bench(c) and ok
         return 0 if ok else 1
     return 0
