@@ -8,6 +8,8 @@ import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
@@ -24,9 +26,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * monotonically increasing sequence number; a DataSource-v2
   * MicroBatchStream exposes queue slices as micro-batch partitions.
   * Delivery semantics are at-least-once (entries are retained until the
-  * engine commits the batch offset); exactly-once end-to-end is obtained
-  * by composing with StreamOps.dedup on a payload id — the webhook-domain
-  * pattern.
+  * engine commits the batch offset). The front door also decides, once
+  * and under the queue lock, whether a post is the first copy of its
+  * `X-Delivery-Key` within the last [[WebhookQueue.dedupHorizonUs]]: the
+  * `first_delivery` column carries that mark, so
+  * `StreamOps.dedupDeliveries` over this source is a stateless filter
+  * (no state store, no watermark-eviction batches). Duplicates are still
+  * queued and read, so a wire view sees every POST.
   *
   * Usage:
   * {{{
@@ -44,12 +50,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * partition-per-broker-shard production extension.
   */
 object WebhookQueue {
-  // value = (ingest ts µs, topic, body, delivery key) — the delivery key
-  // is the X-Delivery-Key idempotency header ("" when the sender sent
-  // none): a receiver that dedups on the header can only do so if its
-  // HTTP layer records the header NEXT TO the payload, so the key is
-  // part of the queue record, the WAL record, and the source schema
-  private val buf = new ConcurrentSkipListMap[Long, (Long, String, String, String)]()
+  // value = (ingest ts µs, topic, body, delivery key, first copy) — the
+  // delivery key is the X-Delivery-Key idempotency header ("" when the
+  // sender sent none): a receiver that dedups on the header can only do
+  // so if its HTTP layer records the header NEXT TO the payload, so the
+  // key is part of the queue record, the WAL record, and the source
+  // schema. The first-copy mark is not logged: recovery recomputes it.
+  private val buf =
+    new ConcurrentSkipListMap[Long, (Long, String, String, String, Boolean)]()
   private val seq = new AtomicLong(0L)
   // retained-entry count tracked separately: ConcurrentSkipListMap.size()
   // is an O(n) traversal, and post() runs it under the global lock on
@@ -59,6 +67,128 @@ object WebhookQueue {
   private val retained = new java.util.concurrent.atomic.AtomicInteger(0)
   @volatile private var server: HttpServer = _
   val maxRetained = 100000
+
+  // --- front-door dedup ---------------------------------------------------
+  /** A post is a duplicate when the same non-empty delivery key was
+    * accepted less than this long before it (µs). Fixed at the default
+    * replay horizon of `StreamOps.dedupDeliveries`; the source column's
+    * metadata states it, so a consumer asking for a longer horizon falls
+    * back to stateful dedup.
+    */
+  val dedupHorizonUs: Long = 2L * 3600 * 1000 * 1000
+
+  // key → (ingest µs, seq) of its first copy within the horizon. Insertion
+  // order is seq order, so expiry pops from the head.
+  private val firstSeen = new java.util.LinkedHashMap[String, (Long, Long)]()
+
+  /** Decide first copy or duplicate for a post accepted at `ts` as seq
+    * `id`. A function of the map and (`ts`, `id`) only, so replaying the
+    * WAL in seq order recomputes every mark. An entry carrying the same
+    * seq is that post itself, recovered from a key segment.
+    */
+  private def mark(key: String, ts: Long, id: Long): Boolean = {
+    val it = firstSeen.values().iterator()
+    var expired = true
+    while (expired && it.hasNext)
+      if (ts - it.next()._1 >= dedupHorizonUs) it.remove() else expired = false
+    if (key.isEmpty) true
+    else {
+      val prev = firstSeen.get(key)
+      if (prev != null && prev._2 == id) true
+      else if (prev != null && ts - prev._1 < dedupHorizonUs) false
+      else {
+        firstSeen.remove(key) // re-insert at the tail: keep seq order
+        firstSeen.put(key, (ts, id))
+        if (wal != null) unsegmented.addLast((id, ts, key))
+        true
+      }
+    }
+  }
+
+  // Keyed first copies that only the WAL records, in seq order. A
+  // compaction drops committed records from the WAL, so it first appends
+  // their keys to the key segment of their time bucket; a whole segment
+  // is deleted once no retained or future post can be within the horizon
+  // of any key in it. Cost per compaction: the keys committed since the
+  // last one, not every key in the horizon.
+  private val unsegmented = new java.util.ArrayDeque[(Long, Long, String)]()
+  private val segmentUs = dedupHorizonUs / 4
+
+  /** One key-segment record: `id \t ts \t b64(deliveryKey) \t crc32`. */
+  private def keyRecord(id: Long, ts: Long, key: String): String = {
+    val payload = s"$id\t$ts\t" + java.util.Base64.getEncoder.encodeToString(
+      key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    s"$payload\t${crc32(payload)}\n"
+  }
+
+  /** The key segments in `walDir` as (bucket, file), oldest first. */
+  private def segments(): Seq[(Long, java.nio.file.Path)] = {
+    val name = """keys-(\d+)\.seg""".r
+    val ls = java.nio.file.Files.list(walDir)
+    try ls.iterator().asScala.flatMap { f =>
+      f.getFileName.toString match {
+        case name(b) => Some(b.toLong -> f)
+        case _ => None
+      }
+    }.toSeq.sortBy(_._1)
+    finally ls.close()
+  }
+
+  /** Load every key segment into the map. Each line is CRC-checked on its
+    * own; a bad line (torn by a crash mid-append) is skipped, since the
+    * WAL still held those records and their keys are re-segmented. A file
+    * not ending in a newline gets one, so later appends start clean.
+    */
+  private def loadSegments(): Unit =
+    segments().foreach { case (_, f) =>
+      val text = java.nio.file.Files.readString(f)
+      text.split("\n").foreach { line =>
+        line.split("\t", -1) match {
+          case Array(idS, tsS, k64, crcS) =>
+            scala.util.Try {
+              if (crc32(s"$idS\t$tsS\t$k64") == crcS.toLong) {
+                val id = idS.toLong
+                val key = new String(java.util.Base64.getDecoder.decode(k64),
+                  java.nio.charset.StandardCharsets.UTF_8)
+                val prev = firstSeen.get(key)
+                if (prev == null || prev._2 < id) {
+                  firstSeen.remove(key)
+                  firstSeen.put(key, (tsS.toLong, id))
+                }
+              }
+            }
+          case _ => ()
+        }
+      }
+      if (text.nonEmpty && !text.endsWith("\n"))
+        java.nio.file.Files.writeString(f, "\n",
+          java.nio.file.StandardOpenOption.APPEND)
+    }
+
+  /** Before a compaction drops the committed records: append their keys
+    * to segments, then delete the segments wholly past the horizon.
+    * Caller holds the queue lock.
+    */
+  private def segmentCommittedKeys(): Unit = {
+    val byBucket = new java.util.TreeMap[Long, java.lang.StringBuilder]()
+    while (!unsegmented.isEmpty && unsegmented.peekFirst()._1 <= lowWater) {
+      val (id, ts, key) = unsegmented.pollFirst()
+      byBucket.computeIfAbsent(ts / segmentUs,
+        _ => new java.lang.StringBuilder).append(keyRecord(id, ts, key))
+    }
+    byBucket.forEach { (b, lines) =>
+      java.nio.file.Files.writeString(walDir.resolve(s"keys-$b.seg"), lines,
+        java.nio.charset.StandardCharsets.UTF_8,
+        java.nio.file.StandardOpenOption.CREATE,
+        java.nio.file.StandardOpenOption.APPEND)
+    }
+    val oldest = if (buf.isEmpty) System.currentTimeMillis() * 1000L
+      else math.min(System.currentTimeMillis() * 1000L, buf.firstEntry().getValue._1)
+    segments().foreach { case (b, f) =>
+      if ((b + 1) * segmentUs + dedupHorizonUs <= oldest)
+        java.nio.file.Files.deleteIfExists(f)
+    }
+  }
 
   // --- optional write-ahead durability ------------------------------------
   // The in-memory queue loses uncommitted deliveries on restart — fine for
@@ -115,6 +245,14 @@ object WebhookQueue {
     * also COMPACTS: the rewritten WAL holds only the live tail, so file
     * size and restart time track the uncommitted backlog, not lifetime
     * traffic.
+    *
+    * Dedup marks: the key segments load first, then every WAL record
+    * (committed ones too) replays through the key map in seq order, which
+    * recomputes each entry's `first_delivery` mark. A directory written
+    * before key segments existed has none, so keys whose records were
+    * compacted away before the upgrade are forgotten: for at most one
+    * horizon after the restart, a duplicate of one of them passes as a
+    * first copy.
     */
   def enableDurability(dir: String): Int = synchronized {
     if (wal != null) { wal.close(); wal = null }
@@ -128,6 +266,10 @@ object WebhookQueue {
     val walFile = walDir.resolve("webhook.wal")
     var recovered = 0
     var maxSeq = seq.get()
+    loadSegments()
+    // committed records whose keys no segment holds yet (the rest of the
+    // unsegmented keys are in `buf`, added below)
+    val committedFirsts = new java.util.ArrayDeque[(Long, Long, String)]()
     if (java.nio.file.Files.exists(walFile)) {
       // Format detection BEFORE parsing: a 4-token line is acceptable
       // legacy framing only in a file the legacy writer produced — i.e.
@@ -166,11 +308,15 @@ object WebhookQueue {
             else new String(dec.decode(k64),
               java.nio.charset.StandardCharsets.UTF_8)
           maxSeq = math.max(maxSeq, id)
+          val segmented = dk.nonEmpty &&
+            Option(firstSeen.get(dk)).exists(_._2 == id)
+          val first = mark(dk, ts, id)
           if (id > lowWater && !buf.containsKey(id)) {
-            buf.put(id, (ts, topic, body, dk))
+            buf.put(id, (ts, topic, body, dk, first))
             retained.incrementAndGet()
             recovered += 1
-          }
+          } else if (id <= lowWater && first && dk.nonEmpty && !segmented)
+            committedFirsts.addLast((id, ts, dk))
         }
         while (ok && it.hasNext) {
           val line = it.next()
@@ -213,6 +359,12 @@ object WebhookQueue {
       } finally stream.close()
     }
     seq.set(maxSeq)
+    unsegmented.clear()
+    unsegmented.addAll(committedFirsts)
+    buf.entrySet().iterator().asScala.foreach { e =>
+      val (ts, _, _, dk, first) = e.getValue
+      if (first && dk.nonEmpty) unsegmented.addLast((e.getKey, ts, dk))
+    }
     compactWal()
     recovered
   }
@@ -222,6 +374,7 @@ object WebhookQueue {
     */
   private def compactWal(): Unit = {
     if (wal != null) wal.close()
+    segmentCommittedKeys()
     val walFile = walDir.resolve("webhook.wal")
     val tmp = walDir.resolve("webhook.wal.tmp")
     val w = java.nio.file.Files.newBufferedWriter(tmp,
@@ -251,6 +404,7 @@ object WebhookQueue {
   /** Close the WAL (files stay for a later recovery). */
   def disableDurability(): Unit = synchronized {
     if (wal != null) { wal.close(); wal = null; walDir = null; lowWater = 0L }
+    unsegmented.clear()
   }
 
   private def persistLowWater(): Unit = {
@@ -264,6 +418,9 @@ object WebhookQueue {
   /** Enqueue one delivery. Returns the sequence id, or -1 when the queue
     * is at capacity (caller answers 503 — real back-pressure; shedding
     * retained-but-uncommitted entries would silently break at-least-once).
+    * An accepted duplicate of a delivery key seen within the horizon is
+    * still queued, with its own seq, marked as not the first copy; a
+    * rejected post marks nothing, so its retry counts as first.
     *
     * Synchronized so `latest` can never observe a sequence number whose
     * entry hasn't landed in the map yet — otherwise a concurrent
@@ -277,7 +434,7 @@ object WebhookQueue {
     else {
       val id = seq.incrementAndGet()
       val ts = System.currentTimeMillis() * 1000L
-      buf.put(id, (ts, topic, body, deliveryKey))
+      buf.put(id, (ts, topic, body, deliveryKey, mark(deliveryKey, ts, id)))
       retained.incrementAndGet()
       if (wal != null) { // write-ahead: land in the log before the 200
         wal.write(record(id, ts, topic, body, deliveryKey))
@@ -298,14 +455,17 @@ object WebhookQueue {
     if (buf.isEmpty) seq.get() else buf.firstKey() - 1
   }
 
+  /** Entries in (from, to]: (seq, ingest µs, topic, body, delivery key,
+    * first copy).
+    */
   def slice(fromExclusive: Long, toInclusive: Long)
-  : Array[(Long, Long, String, String, String)] =
+  : Array[(Long, Long, String, String, String, Boolean)] =
     // iterator, not entrySet().asScala: mapping the Set wrapper rebuilds a
     // hash set and loses the skip list's ascending-seq order
     buf.subMap(fromExclusive, false, toInclusive, true)
       .entrySet().iterator().asScala
       .map(e => (e.getKey, e.getValue._1, e.getValue._2, e.getValue._3,
-        e.getValue._4))
+        e.getValue._4, e.getValue._5))
       .toArray
 
   // --- consumer registry --------------------------------------------------
@@ -362,11 +522,13 @@ object WebhookQueue {
     }
   }
 
-  /** Drop in-memory state only — a durable log (if any) survives, which is
-    * exactly what `enableDurability` recovers from.
+  /** Drop in-memory state only, the delivery-key map included — a durable
+    * log and its key segments (if any) survive, which is exactly what
+    * `enableDurability` recovers from.
     */
   def clear(): Unit = synchronized {
     buf.clear(); retained.set(0); committedBy.clear()
+    firstSeen.clear(); unsegmented.clear()
   }
 
   /** Start the front door on `port` (0 = any free port); returns the
@@ -387,8 +549,9 @@ object WebhookQueue {
           if (x.getRequestMethod == "POST") {
             val body = new String(x.getRequestBody.readAllBytes(),
               java.nio.charset.StandardCharsets.UTF_8)
-            // the idempotency header rides the record: receiver-side
-            // dedup (StreamOps.dedupDeliveries) keys on it
+            // the idempotency header rides the record, and post() marks
+            // a repeat within the horizon as a duplicate: the mark is
+            // what StreamOps.dedupDeliveries filters on
             val dk = Option(x.getRequestHeaders
               .getFirst("X-Delivery-Key")).getOrElse("")
             val id = post(topic, body, dk)
@@ -417,13 +580,33 @@ object WebhookQueue {
 }
 
 object WebhookSource {
+  /** Metadata key of `first_delivery`: the horizon (µs) its marks cover. */
+  val horizonKey: String = "dedup_horizon_us"
+
   val schema: StructType = StructType(Seq(
     StructField("seq", LongType, nullable = false),
     StructField("ingest_ts", TimestampType, nullable = false),
     StructField("topic", StringType, nullable = false),
     StructField("body", StringType, nullable = false),
     // X-Delivery-Key idempotency header; NULL when the sender sent none
-    StructField("delivery_key", StringType, nullable = true)))
+    StructField("delivery_key", StringType, nullable = true),
+    // the front door's dedup mark; its metadata states the horizon
+    StructField("first_delivery", BooleanType, nullable = false,
+      new MetadataBuilder()
+        .putLong(horizonKey, WebhookQueue.dedupHorizonUs).build())))
+
+  /** Whether `schema` has a `first_delivery` column whose marks cover a
+    * replay horizon of `interval`, parsed as `withWatermark` parses its
+    * delay.
+    */
+  def marksCover(schema: StructType, interval: String): Boolean = {
+    val delayMs = EventTimeWatermark.getDelayMs(
+      IntervalUtils.fromIntervalString(interval))
+    schema.find(_.name == "first_delivery").exists { f =>
+      f.metadata.contains(horizonKey) &&
+        f.metadata.getLong(horizonKey) >= delayMs * 1000L
+    }
+  }
 }
 
 class WebhookSourceProvider extends TableProvider with DataSourceRegister {
@@ -486,6 +669,11 @@ class WebhookMicroBatchStream(maxRows: Option[Long] = None,
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startSeq = start.asInstanceOf[WebhookOffset].seqNo
+    // Spark asks for new offsets only once the batch ending at `start` has
+    // completed, but calls commit(end) for a batch only when it constructs
+    // the next one: a caught-up reader's last batch would stay queued after
+    // its query stops, and a fresh query would read it again
+    commitUpTo(startSeq)
     val latest = WebhookQueue.latest
     limit match {
       case r: ReadMaxRows =>
@@ -516,8 +704,17 @@ class WebhookMicroBatchStream(maxRows: Option[Long] = None,
   override def deserializeOffset(json: String): Offset =
     WebhookOffset("""\d+""".r.findFirstIn(json).map(_.toLong).getOrElse(0L))
   override def commit(end: Offset): Unit =
-    WebhookQueue.commitConsumer(consumerId,
-      end.asInstanceOf[WebhookOffset].seqNo)
+    commitUpTo(end.asInstanceOf[WebhookOffset].seqNo)
+
+  // the highest seq this reader committed; an idle poll (start unchanged)
+  // then does not take the queue lock that post() needs
+  private var committed = Long.MinValue
+
+  private def commitUpTo(upto: Long): Unit =
+    if (upto > committed) {
+      WebhookQueue.commitConsumer(consumerId, upto)
+      committed = upto
+    }
   override def stop(): Unit = WebhookQueue.unregisterConsumer(consumerId)
 
   /** The batch slice is split across the session's task width — one
@@ -547,7 +744,7 @@ class WebhookMicroBatchStream(maxRows: Option[Long] = None,
   * correct beyond local mode, where the queue singleton wouldn't exist).
   */
 case class WebhookInputPartition(
-    rows: Array[(Long, Long, String, String, String)])
+    rows: Array[(Long, Long, String, String, String, Boolean)])
   extends InputPartition
 
 object WebhookReaderFactory extends PartitionReaderFactory {
@@ -558,10 +755,10 @@ object WebhookReaderFactory extends PartitionReaderFactory {
       private var i = -1
       override def next(): Boolean = { i += 1; i < rows.length }
       override def get(): InternalRow = {
-        val (seqNo, tsMicros, topic, body, dk) = rows(i)
+        val (seqNo, tsMicros, topic, body, dk, first) = rows(i)
         InternalRow(seqNo, tsMicros,
           UTF8String.fromString(topic), UTF8String.fromString(body),
-          if (dk.isEmpty) null else UTF8String.fromString(dk))
+          if (dk.isEmpty) null else UTF8String.fromString(dk), first)
       }
       override def close(): Unit = ()
     }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
 
+import graft.sources.WebhookSource
+
 /** Event record as it flows through the streaming pipelines (mirrors
   * events.parquet / the webhook payload schema — FIXTURES.md).
   */
@@ -405,8 +407,17 @@ object StreamOps {
     * produce — a foreachBatch replay after a crash in the POST→ledger
     * window, and task-retry/speculative re-POSTs — because all of them
     * re-send the SAME `batchId:key` header (WebhookDelivery's contract).
-    * State is bounded by the watermark on ingest time: a duplicate can
-    * only arrive within the sender's replay horizon.
+    * A duplicate can only arrive within the sender's replay horizon.
+    *
+    * Two plans, one result. When `posts` still carries the front door's
+    * `first_delivery` mark and its metadata says the mark covers
+    * `replayHorizon` (the raw `WebhookSource`, or any projection that
+    * keeps the column), the dedup is the filter `first_delivery`: no
+    * state store and no watermark-eviction batches. Otherwise (a
+    * MemoryStream, a projection without the column, a longer horizon) it
+    * drops duplicates within a watermark on ingest time, with state
+    * bounded by that watermark. Either way the output has no
+    * `first_delivery` column, and the watermark on `ingest_ts` is set.
     *
     * KEYLESS posts (a sender that set no header → NULL `delivery_key`)
     * pass through untouched: `dropDuplicates` compares nulls EQUAL, so
@@ -417,12 +428,16 @@ object StreamOps {
     * no dedup contract, so those rows stay at-least-once by design.
     */
   def dedupDeliveries(posts: DataFrame,
-                      replayHorizon: String = "2 hours"): DataFrame =
-    posts
-      .withWatermark("ingest_ts", replayHorizon)
-      .withColumn("dedup_key", coalesce(col("delivery_key"), expr("uuid()")))
-      .dropDuplicatesWithinWatermark("dedup_key")
-      .drop("dedup_key")
+                      replayHorizon: String = "2 hours"): DataFrame = {
+    val watermarked = posts.withWatermark("ingest_ts", replayHorizon)
+    if (WebhookSource.marksCover(posts.schema, replayHorizon))
+      watermarked.filter(col("first_delivery")).drop("first_delivery")
+    else
+      watermarked
+        .withColumn("dedup_key", coalesce(col("delivery_key"), expr("uuid()")))
+        .dropDuplicatesWithinWatermark("dedup_key")
+        .drop("dedup_key", "first_delivery")
+  }
 
   /** Stream–static enrichment: join the live stream against the customer
     * dimension. The static side is broadcast per micro-batch; no stream

@@ -5,9 +5,11 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkSpec
+import graft.streaming.StreamOps
 
 /** End-to-end webhook path: real HTTP POSTs → DSv2 micro-batch source →
   * from_json(declared schema) → memory sink (SURVEY.md §3.3).
@@ -444,6 +446,254 @@ class WebhookSourceSpec extends SparkSpec {
       assert(got.head == ((0L, first.to(first + 9).toSeq)),
         s"first batch: ${got.head}")
       assert(got.forall(_._2.nonEmpty), s"empty micro-batches: $got")
+    } finally WebhookQueue.clear()
+  }
+
+  // ---- front-door dedup --------------------------------------------------
+
+  /** Every row a query over `df` writes, per batch id (empty batches too). */
+  private def runToEnd(df: DataFrame, checkpoint: String = null)
+  : (Seq[(Long, Seq[org.apache.spark.sql.Row])],
+    org.apache.spark.sql.streaming.StreamingQuery) = {
+    val batches = scala.collection.mutable.ArrayBuffer[
+      (Long, Seq[org.apache.spark.sql.Row])]()
+    val w = df.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
+      val rows = b.collect().toSeq
+      batches.synchronized { batches += id -> rows }
+      ()
+    }
+    val q = Option(checkpoint)
+      .fold(w)(c => w.option("checkpointLocation", c)).start()
+    q.processAllAvailable()
+    q.stop()
+    (batches.synchronized(batches.sortBy(_._1).toSeq), q)
+  }
+
+  private def raw(): DataFrame =
+    spark.readStream.format("graft.sources.WebhookSourceProvider").load()
+
+  private def marks(): Seq[(String, Boolean)] =
+    WebhookQueue.slice(0L, Long.MaxValue).map(e => (e._5, e._6)).toSeq
+
+  test("front-door dedup: a duplicate inside one batch is dropped") {
+    WebhookQueue.clear()
+    try {
+      WebhookQueue.post("t", """{"i":1}""", "k1")
+      WebhookQueue.post("t", """{"i":2}""", "k2")
+      WebhookQueue.post("t", """{"i":1}""", "k1") // sender retry
+      // the duplicate is queued (a wire view sees it), marked not-first
+      assert(marks() == Seq(("k1", true), ("k2", true), ("k1", false)))
+      val (batches, _) = runToEnd(StreamOps.dedupDeliveries(raw()))
+      assert(batches.map(_._2.length) == Seq(3 - 1),
+        s"one batch of the 2 first copies: $batches")
+      assert(batches.head._2.map(_.getAs[String]("delivery_key")).sorted ==
+        Seq("k1", "k2"))
+      assert(!batches.head._2.head.schema.fieldNames.contains("first_delivery"))
+    } finally WebhookQueue.clear()
+  }
+
+  test("front-door dedup: two keyless posts both survive") {
+    WebhookQueue.clear()
+    try {
+      WebhookQueue.post("t", """{"same":1}""")
+      WebhookQueue.post("t", """{"same":1}""")
+      assert(marks() == Seq(("", true), ("", true)))
+      val (batches, _) = runToEnd(StreamOps.dedupDeliveries(raw()))
+      val rows = batches.flatMap(_._2)
+      assert(rows.length == 2 &&
+        rows.forall(_.isNullAt(rows.head.fieldIndex("delivery_key"))))
+    } finally WebhookQueue.clear()
+  }
+
+  test("front-door dedup: a duplicate after truncation, compaction and a " +
+    "WAL restart, still inside the horizon, is dropped") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_wal_dedup")
+    WebhookQueue.clear()
+    try {
+      WebhookQueue.enableDurability(dir.toString)
+      WebhookQueue.post("t", """{"i":0}""", "early")
+      (1 to 1100).foreach(i => WebhookQueue.post("t", s"""{"i":$i}""", s"k$i"))
+      // commit everything: past the compaction threshold, so the WAL is
+      // rewritten empty and the keys move to a key segment
+      WebhookQueue.truncate(WebhookQueue.latest)
+      val wal = dir.resolve("webhook.wal")
+      assert(java.nio.file.Files.size(wal) == 0L, "no compaction happened")
+      val segs = java.nio.file.Files.list(dir).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("keys-")).toSeq
+      assert(segs.nonEmpty, "no key segment written")
+      // an uncommitted first copy and its duplicate stay in the WAL tail
+      WebhookQueue.post("t", """{"i":2000}""", "tail")
+      WebhookQueue.post("t", """{"i":2000}""", "tail")
+      WebhookQueue.disableDurability()
+      WebhookQueue.clear()
+      assert(WebhookQueue.enableDurability(dir.toString) == 2)
+      // recovery recomputed the tail's marks
+      assert(marks() == Seq(("tail", true), ("tail", false)))
+      // and the compacted-away keys are still known
+      WebhookQueue.post("t", """{"i":0}""", "early")
+      WebhookQueue.post("t", """{"i":700}""", "k700")
+      WebhookQueue.post("t", """{"i":3000}""", "fresh")
+      assert(marks().drop(2) ==
+        Seq(("early", false), ("k700", false), ("fresh", true)))
+      val (batches, _) = runToEnd(StreamOps.dedupDeliveries(raw()))
+      assert(batches.flatMap(_._2).map(_.getAs[String]("delivery_key"))
+        .sorted == Seq("fresh", "tail"))
+    } finally {
+      WebhookQueue.disableDurability()
+      WebhookQueue.clear()
+    }
+  }
+
+  test("front-door dedup: a torn key-segment line costs that line only") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_wal_seg")
+    WebhookQueue.clear()
+    def restart(): Unit = {
+      WebhookQueue.disableDurability()
+      WebhookQueue.clear()
+      WebhookQueue.enableDurability(dir.toString)
+    }
+    def segment(): java.nio.file.Path = java.nio.file.Files.list(dir)
+      .iterator().asScala.filter(_.getFileName.toString.startsWith("keys-"))
+      .toSeq.maxBy(_.getFileName.toString)
+    try {
+      WebhookQueue.enableDurability(dir.toString)
+      (1 to 1100).foreach(i => WebhookQueue.post("t", "{}", s"a$i"))
+      WebhookQueue.truncate(WebhookQueue.latest)
+      // a crash mid-append leaves a partial last line without a newline
+      java.nio.file.Files.writeString(segment(), "99999\t17",
+        java.nio.file.StandardOpenOption.APPEND)
+      restart()
+      // later appends start on a fresh line, so they load too
+      (1 to 1100).foreach(i => WebhookQueue.post("t", "{}", s"b$i"))
+      WebhookQueue.truncate(WebhookQueue.latest)
+      restart()
+      // the lines on either side of the torn one
+      WebhookQueue.post("t", "{}", "a1100")
+      WebhookQueue.post("t", "{}", "b1")
+      WebhookQueue.post("t", "{}", "c1")
+      assert(marks() == Seq(("a1100", false), ("b1", false), ("c1", true)))
+    } finally {
+      WebhookQueue.disableDurability()
+      WebhookQueue.clear()
+    }
+  }
+
+  test("front-door dedup: a key whose first copy is a recovered WAL record " +
+    "3 h old counts as first again") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_wal_expiry")
+    WebhookQueue.clear()
+    try {
+      // a WAL written earlier: one record 3 h old, one 1 h old
+      val enc = java.util.Base64.getEncoder
+      def b64(x: String) = enc.encodeToString(x.getBytes("UTF-8"))
+      def rec(id: Long, ts: Long, key: String): String = {
+        val payload = s"$id\t$ts\t${b64("t")}\t${b64("{}")}\t${b64(key)}"
+        val crc = new java.util.zip.CRC32
+        crc.update(payload.getBytes("UTF-8"))
+        s"$payload\t${crc.getValue}\n"
+      }
+      val hourUs = 3600L * 1000 * 1000
+      val now = System.currentTimeMillis() * 1000L
+      java.nio.file.Files.writeString(dir.resolve("webhook.wal"),
+        rec(1, now - 3 * hourUs, "old") + rec(2, now - hourUs, "recent"))
+      // and a key segment from 1970, long past the horizon
+      java.nio.file.Files.writeString(dir.resolve("keys-0.seg"), "")
+      assert(WebhookQueue.enableDurability(dir.toString) == 2)
+      assert(!java.nio.file.Files.exists(dir.resolve("keys-0.seg")),
+        "a segment past the horizon was kept")
+      WebhookQueue.post("t", "{}", "old")
+      WebhookQueue.post("t", "{}", "recent")
+      assert(marks() == Seq(("old", true), ("recent", true),
+        ("old", true), ("recent", false)))
+    } finally {
+      WebhookQueue.disableDurability()
+      WebhookQueue.clear()
+    }
+  }
+
+  test("dedupDeliveries over the raw source plans no stateful operator and " +
+    "runs no no-data batch") {
+    WebhookQueue.clear()
+    try {
+      val src = raw()
+      assert(src.schema("first_delivery").metadata
+        .getLong(WebhookSource.horizonKey) == WebhookQueue.dedupHorizonUs)
+      (1 to 5).foreach(i => WebhookQueue.post("t", s"""{"i":$i}""", s"k$i"))
+      WebhookQueue.post("t", """{"i":1}""", "k1")
+      val (batches, q) = runToEnd(StreamOps.dedupDeliveries(src))
+      assert(batches.map(_._2.length) == Seq(5), s"batches: $batches")
+      assert(q.recentProgress.nonEmpty &&
+        q.recentProgress.forall(_.stateOperators.isEmpty),
+        "the marked source still planned a state store")
+    } finally WebhookQueue.clear()
+  }
+
+  test("dedupDeliveries over a projection without the mark keeps the " +
+    "stateful operator") {
+    WebhookQueue.clear()
+    try {
+      (1 to 5).foreach(i => WebhookQueue.post("t", s"""{"i":$i}""", s"k$i"))
+      WebhookQueue.post("t", """{"i":1}""", "k1")
+      val (batches, q) = runToEnd(StreamOps.dedupDeliveries(
+        raw().select("ingest_ts", "delivery_key", "body")))
+      assert(batches.flatMap(_._2).length == 5, s"batches: $batches")
+      assert(q.recentProgress.exists(_.stateOperators.nonEmpty),
+        "the unmarked projection lost its state store")
+      // a longer horizon than the marks cover is stateful too
+      assert(!WebhookSource.marksCover(raw().schema, "3 hours"))
+      assert(WebhookSource.marksCover(raw().schema, "2 hours"))
+    } finally WebhookQueue.clear()
+  }
+
+  test("a stateless query that caught up and stopped leaves nothing for a " +
+    "fresh query to re-read") {
+    WebhookQueue.clear()
+    try {
+      (1 to 5).foreach(i => WebhookQueue.post("t", s"""{"i":$i}"""))
+      val (first, _) = runToEnd(raw().select("seq"))
+      assert(first.flatMap(_._2).length == 5)
+      // Spark commits a batch only when it builds the next one; the
+      // reader commits a caught-up query's last batch itself
+      assert(WebhookQueue.slice(0L, Long.MaxValue).isEmpty,
+        "the last batch stayed queued")
+      val (second, _) = runToEnd(raw().select("seq"))
+      assert(second.flatMap(_._2).isEmpty, s"re-read: $second")
+    } finally WebhookQueue.clear()
+  }
+
+  test("a batch whose sink fails is re-read in full from the same " +
+    "checkpoint") {
+    WebhookQueue.clear()
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_fail").toString
+    try {
+      val base = WebhookQueue.latest
+      (1 to 30).foreach(i => WebhookQueue.post("t", s"""{"i":$i}"""))
+      def capped() = spark.readStream
+        .format("graft.sources.WebhookSourceProvider")
+        .option("maxRowsPerBatch", "10").load().select("seq")
+      val attempted = scala.collection.mutable.ArrayBuffer[(Long, Seq[Long])]()
+      val failing = capped().writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          val seqs = b.collect().map(_.getLong(0)).toSeq.sorted
+          attempted.synchronized { attempted += id -> seqs }
+          if (id == 1L) throw new IllegalStateException("injected sink failure")
+          ()
+        }.start()
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        failing.processAllAvailable()
+      }
+      failing.stop()
+      assert(attempted.map(_._1).toSeq == Seq(0L, 1L))
+      // batch 0 is committed and gone; batch 1 is still queued
+      assert(WebhookQueue.slice(0L, Long.MaxValue).map(_._1).toSeq ==
+        (base + 11).to(base + 30))
+      val (resumed, _) = runToEnd(capped(), ckpt)
+      assert(resumed.head._1 == 1L, s"resumed at ${resumed.head._1}")
+      assert(resumed.head._2.map(_.getLong(0)).sorted == attempted(1)._2,
+        "the failed batch was not re-read in full")
+      assert((attempted.head._2 ++ resumed.flatMap(_._2.map(_.getLong(0))))
+        .sorted == (base + 1).to(base + 30), "lost or repeated rows")
     } finally WebhookQueue.clear()
   }
 }
