@@ -64,37 +64,74 @@ class WebhookSourceSpec extends SparkSpec {
     } finally WebhookQueue.stopServer()
   }
 
-  test("durable queue recovers uncommitted deliveries across a restart") {
+  // ---- shard counts ------------------------------------------------------
+
+  /** Registers `name` at one shard and, renamed, at four. Each run starts
+    * on fresh shards and leaves the queue at one shard.
+    */
+  private def shardTest(name: String)(body: Int => Unit): Unit =
+    Seq(1, 4).foreach { n =>
+      test(if (n == 1) name else s"$name, at 4 shards") {
+        WebhookQueue.init(n)
+        try body(n) finally WebhookQueue.init(1)
+      }
+    }
+
+  /** The k-th of the topics "topic0", "topic1", … that routes to shard i. */
+  private def topicOn(i: Int, k: Int = 0): String =
+    Iterator.from(0).map(j => s"topic$j")
+      .filter(WebhookQueue.route(_) == i).drop(k).next()
+
+  /** Post `body(k)` for k in `ks`, spreading the posts over every shard;
+    * returns (shard, seq) per post.
+    */
+  private def spread(ks: Range)(body: Int => String): Seq[(Int, Long)] =
+    ks.map { k =>
+      val t = topicOn(k % WebhookQueue.nShards)
+      (WebhookQueue.route(t), WebhookQueue.post(t, body(k)))
+    }
+
+  /** Every queued entry as (shard, seq), shard by shard. */
+  private def queued(): Seq[(Int, Long)] =
+    (0 until WebhookQueue.nShards).flatMap(i =>
+      WebhookQueue.shard(i).slice(0L, Long.MaxValue).map(i -> _._1))
+
+  private def shardSeqs(rows: Seq[org.apache.spark.sql.Row]): Seq[(Int, Long)] =
+    rows.map(r => (r.getAs[Int]("shard"), r.getAs[Long]("seq"))).sorted
+
+  shardTest("durable queue recovers uncommitted deliveries across a restart") { n =>
     val dir = java.nio.file.Files.createTempDirectory("graft_wal").toString
+    assert(WebhookQueue.enableDurability(dir) == 0)
+    // per shard: three posts on two of its topics; the engine commits the
+    // first
+    val posted = (0 until n).map { i =>
+      val (orders, alerts) = (topicOn(i), topicOn(i, 1))
+      val id1 = WebhookQueue.post(orders, """{"event_id":1}""")
+      val id2 = WebhookQueue.post(orders, """{"event_id":2}""")
+      val id3 = WebhookQueue.post(alerts, """{"event_id":3}""")
+      WebhookQueue.shard(i).truncate(id1) // engine committed through id1
+      (orders, alerts, id2, id3)
+    }
+    // crash: WALs closed, all in-memory state lost
+    WebhookQueue.disableDurability()
     WebhookQueue.clear()
-    try {
-      assert(WebhookQueue.enableDurability(dir) == 0)
-      val id1 = WebhookQueue.post("orders", """{"event_id":1}""")
-      val id2 = WebhookQueue.post("orders", """{"event_id":2}""")
-      val id3 = WebhookQueue.post("alerts", """{"event_id":3}""")
-      WebhookQueue.truncate(id1) // engine committed through id1
-      // crash: WAL closed, all in-memory state lost
-      WebhookQueue.disableDurability()
-      WebhookQueue.clear()
-      assert(WebhookQueue.slice(0L, Long.MaxValue).isEmpty)
-      // restart: only the uncommitted tail comes back
-      assert(WebhookQueue.enableDurability(dir) == 2)
-      val back = WebhookQueue.slice(0L, Long.MaxValue)
+    assert(queued().isEmpty)
+    // restart: only each shard's uncommitted tail comes back
+    assert(WebhookQueue.enableDurability(dir) == 2 * n)
+    posted.zipWithIndex.foreach { case ((orders, alerts, id2, id3), i) =>
+      val back = WebhookQueue.shard(i).slice(0L, Long.MaxValue)
       assert(back.map(_._1).toSeq == Seq(id2, id3))
       assert(back.map(e => (e._3, e._4)).toSeq == Seq(
-        ("orders", """{"event_id":2}"""), ("alerts", """{"event_id":3}""")))
+        (orders, """{"event_id":2}"""), (alerts, """{"event_id":3}""")))
       // sequence numbers continue monotonically past the recovered max
-      val id4 = WebhookQueue.post("orders", """{"event_id":4}""")
+      val id4 = WebhookQueue.post(orders, """{"event_id":4}""")
       assert(id4 == id3 + 1)
-      // a second recovery after committing everything replays nothing
-      WebhookQueue.truncate(id4)
-      WebhookQueue.disableDurability()
-      WebhookQueue.clear()
-      assert(WebhookQueue.enableDurability(dir) == 0)
-    } finally {
-      WebhookQueue.disableDurability()
-      WebhookQueue.clear()
+      WebhookQueue.shard(i).truncate(id4)
     }
+    // a second recovery after committing everything replays nothing
+    WebhookQueue.disableDurability()
+    WebhookQueue.clear()
+    assert(WebhookQueue.enableDurability(dir) == 0)
   }
 
   test("WAL recovery survives a torn tail line and compacts the log") {
@@ -216,48 +253,56 @@ class WebhookSourceSpec extends SparkSpec {
     }
   }
 
-  test("maxRowsPerBatch caps every micro-batch and loses nothing") {
-    WebhookQueue.clear()
-    try {
-      (1 to 250).foreach(i => WebhookQueue.post("t", s"""{"i":$i}"""))
-      val batchSizes = scala.collection.mutable.ArrayBuffer[Long]()
-      val seqs = scala.collection.mutable.ArrayBuffer[Long]()
-      val q = spark.readStream
-        .format("graft.sources.WebhookSourceProvider")
-        .option("maxRowsPerBatch", "40")
-        .load()
-        .writeStream
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-          val s = df.select("seq").collect().map(_.getLong(0))
-          batchSizes.synchronized { batchSizes += s.length; seqs ++= s }
-          ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val sizes = batchSizes.filter(_ > 0)
-      assert(sizes.forall(_ <= 40), s"batch over the cap: $sizes")
-      assert(sizes.length >= 7, s"burst not split: $sizes") // ceil(250/40)
-      assert(seqs.sorted.toSeq == seqs.min.to(seqs.min + 249).toSeq,
-        "every delivery exactly once, in sequence")
-    } finally WebhookQueue.clear()
+  shardTest("maxRowsPerBatch caps every micro-batch and loses nothing") { n =>
+    val posted = spread(1 to 250)(k => s"""{"i":$k}""")
+    val batches = scala.collection.mutable.ArrayBuffer[Seq[(Int, Long)]]()
+    val q = spark.readStream
+      .format("graft.sources.WebhookSourceProvider")
+      .option("maxRowsPerBatch", "40")
+      .load()
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        val s = shardSeqs(df.select("shard", "seq").collect().toSeq)
+        batches.synchronized { batches += s }
+        ()
+      }
+      .start()
+    q.processAllAvailable()
+    q.stop()
+    val sizes = batches.map(_.length).filter(_ > 0)
+    assert(sizes.forall(_ <= 40), s"batch over the cap: $sizes")
+    assert(sizes.length >= 7, s"burst not split: $sizes") // ceil(250/40)
+    assert(batches.flatten.sorted == posted.sorted,
+      "every delivery exactly once")
+    // no shard starves another: the first batch reads every shard
+    assert(batches.head.map(_._1).distinct.length == n,
+      s"first batch: ${batches.head}")
   }
 
-  test("a multi-row micro-batch spans more than one input partition") {
-    WebhookQueue.clear()
-    try {
-      (1 to 10).foreach(i => WebhookQueue.post("t", s"""{"event_id":$i}"""))
-      // make sure a session exists so planning can read the task width
-      assert(spark.sparkContext.isLocal)
-      val stream = new WebhookMicroBatchStream
-      val parts = stream.planInputPartitions(
-        WebhookOffset(0L), WebhookOffset(WebhookQueue.latest))
-      assert(parts.length > 1, s"expected >1 partition, got ${parts.length}")
-      val seqs = parts.flatMap(
-        _.asInstanceOf[WebhookInputPartition].rows.map(_._1))
-      assert(seqs.toSeq == seqs.sorted.toSeq) // contiguous ranges, in order
-      assert(seqs.length == 10 && seqs.distinct.length == 10)
-    } finally WebhookQueue.clear()
+  shardTest("a multi-row micro-batch spans more than one input partition") { n =>
+    // a hot shard: ten rows on one topic, and three on every other shard
+    (1 to 10).foreach(i => WebhookQueue.post(topicOn(0), s"""{"event_id":$i}"""))
+    (1 until n).foreach(i =>
+      (1 to 3).foreach(j => WebhookQueue.post(topicOn(i), s"""{"j":$j}""")))
+    // make sure a session exists so planning can read the task width
+    assert(spark.sparkContext.isLocal)
+    val stream = new WebhookMicroBatchStream
+    val parts = stream.planInputPartitions(
+      WebhookOffset(Vector.fill(n)(0L)), stream.latestOffset())
+      .map(_.asInstanceOf[WebhookInputPartition])
+    stream.stop()
+    assert(parts.count(_.shard == 0) > 1,
+      s"expected >1 partition for the hot shard, got ${parts.length}")
+    // every partition is one shard's contiguous ascending seq range
+    parts.foreach { p =>
+      val seqs = p.rows.map(_._1).toSeq
+      assert(seqs == seqs.head.to(seqs.head + seqs.length - 1))
+    }
+    // and each shard's rows are read once, in order
+    (0 until n).foreach { i =>
+      assert(parts.filter(_.shard == i).flatMap(_.rows.map(_._1)).toSeq ==
+        (1L to (if (i == 0) 10L else 3L)))
+    }
   }
 
   test("malformed payloads are dead-lettered; well-formed rows unaffected") {
@@ -356,40 +401,47 @@ class WebhookSourceSpec extends SparkSpec {
     assert(dead2.isEmpty)
   }
 
-  test("queue retention waits for the slowest registered consumer") {
+  shardTest("queue retention waits for the slowest registered consumer") { n =>
     // broker consumer-group semantics: several streaming queries read
     // the one queue, each committing its own offset; truncation follows
     // the MINIMUM — a fast reader's commit must never drop entries a
     // slow reader has not read yet (the domain-loop composition relies
-    // on this: processor + wire-tap + receiver share the queue)
-    WebhookQueue.clear()
-    val base = WebhookQueue.latest
+    // on this: processor + wire-tap + receiver share the queue). Every
+    // shard keeps its own registry.
+    val shards = (0 until n).map(WebhookQueue.shard)
+    def post(k: Int): Unit =
+      (0 until n).foreach(i => WebhookQueue.post(topicOn(i), s"""{"i":$k}"""))
     WebhookQueue.registerConsumer("fast")
     WebhookQueue.registerConsumer("slow")
-    (1 to 5).foreach(i => WebhookQueue.post("t", s"""{"i":$i}"""))
-    assert(WebhookQueue.slice(base, base + 5).length == 5)
+    (1 to 5).foreach(post)
+    shards.foreach(s => assert(s.slice(0L, 5L).length == 5))
     // the fast reader commits everything — nothing may truncate while
     // the slow reader still sits at its registration floor
-    WebhookQueue.commitConsumer("fast", base + 5)
-    assert(WebhookQueue.slice(base, base + 5).length == 5,
-      "fast commit truncated entries the slow consumer has not read")
-    WebhookQueue.commitConsumer("slow", base + 3)
-    assert(WebhookQueue.slice(base, base + 5).map(_._1).toSeq ==
-      Seq(base + 4, base + 5), "truncation must follow the minimum commit")
+    shards.foreach(_.commitConsumer("fast", 5L))
+    shards.foreach(s => assert(s.slice(0L, 5L).length == 5,
+      "fast commit truncated entries the slow consumer has not read"))
+    // a commit on one shard truncates that shard only
+    shards.head.commitConsumer("slow", 3L)
+    assert(shards.head.slice(0L, 5L).map(_._1).toSeq == Seq(4L, 5L),
+      "truncation must follow the minimum commit")
+    shards.tail.foreach(s => assert(s.slice(0L, 5L).length == 5))
+    shards.tail.foreach(_.commitConsumer("slow", 3L))
+    shards.foreach(s => assert(s.slice(0L, 5L).map(_._1).toSeq == Seq(4L, 5L)))
     // a consumer that deregisters stops holding the queue back
     WebhookQueue.unregisterConsumer("slow")
-    WebhookQueue.commitConsumer("fast", base + 5)
-    assert(WebhookQueue.slice(base, base + 5).isEmpty)
+    shards.foreach(_.commitConsumer("fast", 5L))
+    shards.foreach(s => assert(s.slice(0L, 5L).isEmpty))
     // commits are monotonic per consumer: a replayed (older) commit
     // cannot resurrect a lower floor
     WebhookQueue.unregisterConsumer("fast")
     WebhookQueue.registerConsumer("fast2")
-    (6 to 8).foreach(i => WebhookQueue.post("t", s"""{"i":$i}"""))
-    WebhookQueue.commitConsumer("fast2", base + 8)
-    WebhookQueue.commitConsumer("fast2", base + 6) // replay of an old commit
-    assert(WebhookQueue.slice(base, base + 8).isEmpty,
-      "an older replayed commit moved the floor backwards")
-    WebhookQueue.clear()
+    (6 to 8).foreach(post)
+    shards.foreach { s =>
+      s.commitConsumer("fast2", 8L)
+      s.commitConsumer("fast2", 6L) // replay of an old commit
+      assert(s.slice(0L, 8L).isEmpty,
+        "an older replayed commit moved the floor backwards")
+    }
   }
 
   test("the front door answers sequential POSTs on one keep-alive " +
@@ -418,35 +470,33 @@ class WebhookSourceSpec extends SparkSpec {
     }
   }
 
-  test("a fresh query starts at the retained floor: after a truncation " +
-    "its first micro-batch holds rows") {
-    WebhookQueue.clear()
-    try {
-      (1 to 300).foreach(i => WebhookQueue.post("t", s"""{"i":$i}"""))
-      WebhookQueue.truncate(WebhookQueue.latest) // an earlier reader's commit
-      assert(WebhookQueue.floor == WebhookQueue.latest)
-      val first = WebhookQueue.post("t", """{"i":301}""")
-      (302 to 310).foreach(i => WebhookQueue.post("t", s"""{"i":$i}"""))
-      assert(WebhookQueue.floor == first - 1)
-      val batches = scala.collection.mutable.ArrayBuffer[(Long, Seq[Long])]()
-      val q = spark.readStream
-        .format("graft.sources.WebhookSourceProvider")
-        .option("maxRowsPerBatch", "50")
-        .load()
-        .writeStream
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
-          val s = df.select("seq").collect().map(_.getLong(0)).toSeq.sorted
-          batches.synchronized { batches += id -> s }
-          ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val got = batches.sortBy(_._1).toSeq
-      assert(got.head == ((0L, first.to(first + 9).toSeq)),
-        s"first batch: ${got.head}")
-      assert(got.forall(_._2.nonEmpty), s"empty micro-batches: $got")
-    } finally WebhookQueue.clear()
+  shardTest("a fresh query starts at the retained floor: after a truncation " +
+    "its first micro-batch holds rows") { n =>
+    val shards = (0 until n).map(WebhookQueue.shard)
+    spread(1 to 300)(k => s"""{"i":$k}""")
+    shards.foreach(s => s.truncate(s.latest)) // an earlier reader's commit
+    shards.foreach(s => assert(s.floor == s.latest))
+    val fresh = spread(301 to 310)(k => s"""{"i":$k}""")
+    shards.zipWithIndex.foreach { case (s, i) =>
+      assert(s.floor == fresh.filter(_._1 == i).map(_._2).min - 1)
+    }
+    val batches = scala.collection.mutable.ArrayBuffer[(Long, Seq[(Int, Long)])]()
+    val q = spark.readStream
+      .format("graft.sources.WebhookSourceProvider")
+      .option("maxRowsPerBatch", "50")
+      .load()
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+        val s = shardSeqs(df.select("shard", "seq").collect().toSeq)
+        batches.synchronized { batches += id -> s }
+        ()
+      }
+      .start()
+    q.processAllAvailable()
+    q.stop()
+    val got = batches.sortBy(_._1).toSeq
+    assert(got.head == ((0L, fresh.sorted)), s"first batch: ${got.head}")
+    assert(got.forall(_._2.nonEmpty), s"empty micro-batches: $got")
   }
 
   // ---- front-door dedup --------------------------------------------------
@@ -645,55 +695,276 @@ class WebhookSourceSpec extends SparkSpec {
     } finally WebhookQueue.clear()
   }
 
-  test("a stateless query that caught up and stopped leaves nothing for a " +
-    "fresh query to re-read") {
-    WebhookQueue.clear()
-    try {
-      (1 to 5).foreach(i => WebhookQueue.post("t", s"""{"i":$i}"""))
-      val (first, _) = runToEnd(raw().select("seq"))
-      assert(first.flatMap(_._2).length == 5)
-      // Spark commits a batch only when it builds the next one; the
-      // reader commits a caught-up query's last batch itself
-      assert(WebhookQueue.slice(0L, Long.MaxValue).isEmpty,
-        "the last batch stayed queued")
-      val (second, _) = runToEnd(raw().select("seq"))
-      assert(second.flatMap(_._2).isEmpty, s"re-read: $second")
-    } finally WebhookQueue.clear()
+  shardTest("a stateless query that caught up and stopped leaves nothing for a " +
+    "fresh query to re-read") { _ =>
+    spread(1 to 5)(k => s"""{"i":$k}""")
+    val (first, _) = runToEnd(raw().select("seq"))
+    assert(first.flatMap(_._2).length == 5)
+    // Spark commits a batch only when it builds the next one; the
+    // reader commits a caught-up query's last batch itself
+    assert(queued().isEmpty, "the last batch stayed queued")
+    val (second, _) = runToEnd(raw().select("seq"))
+    assert(second.flatMap(_._2).isEmpty, s"re-read: $second")
   }
 
-  test("a batch whose sink fails is re-read in full from the same " +
-    "checkpoint") {
-    WebhookQueue.clear()
+  shardTest("a batch whose sink fails is re-read in full from the same " +
+    "checkpoint") { _ =>
     val ckpt = java.nio.file.Files.createTempDirectory("graft_fail").toString
+    val posted = spread(1 to 30)(k => s"""{"i":$k}""")
+    def capped() = spark.readStream
+      .format("graft.sources.WebhookSourceProvider")
+      .option("maxRowsPerBatch", "10").load().select("shard", "seq")
+    val attempted = scala.collection.mutable.ArrayBuffer[(Long, Seq[(Int, Long)])]()
+    val failing = capped().writeStream
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        val seqs = shardSeqs(b.collect().toSeq)
+        attempted.synchronized { attempted += id -> seqs }
+        if (id == 1L) throw new IllegalStateException("injected sink failure")
+        ()
+      }.start()
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      failing.processAllAvailable()
+    }
+    failing.stop()
+    assert(attempted.map(_._1).toSeq == Seq(0L, 1L))
+    // batch 0 read 10 rows, the head of each shard it read from
+    assert(attempted.head._2.length == 10)
+    attempted.head._2.groupBy(_._1).foreach { case (_, s) =>
+      assert(s.map(_._2) == (1L to s.length))
+    }
+    // batch 0 is committed and gone; batch 1 is still queued
+    assert(queued().sorted == posted.sorted.diff(attempted.head._2))
+    val (resumed, _) = runToEnd(capped(), ckpt)
+    assert(resumed.head._1 == 1L, s"resumed at ${resumed.head._1}")
+    assert(shardSeqs(resumed.head._2) == attempted(1)._2,
+      "the failed batch was not re-read in full")
+    assert((attempted.head._2 ++ resumed.flatMap(b => shardSeqs(b._2))).sorted ==
+      posted.sorted, "lost or repeated rows")
+  }
+
+  shardTest("a fresh query over a caught-up queue runs no empty micro-batch") { _ =>
+    spread(1 to 5)(k => s"""{"i":$k}""")
+    val (drained, _) = runToEnd(raw().select("seq"))
+    assert(drained.flatMap(_._2).length == 5)
+    // a fresh query over the drained queue runs no batch until a post
+    // arrives: Spark would run batch 0 over no rows otherwise
+    val batches = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+    val q = raw().select("seq").writeStream
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        val rows = b.count()
+        batches.synchronized { batches += id -> rows }
+        ()
+      }.start()
+    q.processAllAvailable()
+    assert(batches.isEmpty, s"batches over a caught-up queue: $batches")
+    WebhookQueue.post(topicOn(0), """{"i":6}""")
+    q.processAllAvailable()
+    q.stop()
+    assert(batches.toSeq == Seq(0L -> 1L))
+    // progress of batches that ran (an idle trigger reports no addBatch)
+    val ran = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
+    assert(ran.count(_.numInputRows == 0) == 0,
+      s"empty batches: ${ran.map(_.numInputRows).toSeq}")
+  }
+
+  // ---- shards: routing, offsets, back-pressure, WAL layout, dedup scope ---
+
+  test("the front door routes topics to shards; per-shard FIFO holds") {
+    WebhookQueue.init(2)
+    val port = WebhookQueue.startServer(0)
     try {
-      val base = WebhookQueue.latest
-      (1 to 30).foreach(i => WebhookQueue.post("t", s"""{"i":$i}"""))
-      def capped() = spark.readStream
-        .format("graft.sources.WebhookSourceProvider")
-        .option("maxRowsPerBatch", "10").load().select("seq")
-      val attempted = scala.collection.mutable.ArrayBuffer[(Long, Seq[Long])]()
-      val failing = capped().writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          val seqs = b.collect().map(_.getLong(0)).toSeq.sorted
-          attempted.synchronized { attempted += id -> seqs }
-          if (id == 1L) throw new IllegalStateException("injected sink failure")
-          ()
-        }.start()
-      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        failing.processAllAvailable()
+      val client = HttpClient.newHttpClient()
+      def post(topic: String, body: String): Int = client.send(
+        HttpRequest.newBuilder(URI.create(
+          s"http://localhost:$port/webhook/$topic"))
+          .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+        HttpResponse.BodyHandlers.ofString()).statusCode()
+
+      // one front door; the topic picks the shard. Interleave two topics
+      // that route to different shards to prove isolation
+      val (orders, alerts) = (topicOn(0), topicOn(1))
+      (1 to 25).foreach { i =>
+        assert(post(orders, s"""{"i":$i}""") == 200)
+        assert(post(alerts, s"""{"i":$i}""") == 200)
       }
-      failing.stop()
-      assert(attempted.map(_._1).toSeq == Seq(0L, 1L))
-      // batch 0 is committed and gone; batch 1 is still queued
-      assert(WebhookQueue.slice(0L, Long.MaxValue).map(_._1).toSeq ==
-        (base + 11).to(base + 30))
-      val (resumed, _) = runToEnd(capped(), ckpt)
-      assert(resumed.head._1 == 1L, s"resumed at ${resumed.head._1}")
-      assert(resumed.head._2.map(_.getLong(0)).sorted == attempted(1)._2,
-        "the failed batch was not re-read in full")
-      assert((attempted.head._2 ++ resumed.flatMap(_._2.map(_.getLong(0))))
-        .sorted == (base + 1).to(base + 30), "lost or repeated rows")
-    } finally WebhookQueue.clear()
+
+      val q = raw().writeStream.format("memory").queryName("t_sharded")
+        .outputMode("append").start()
+      q.processAllAvailable()
+      val rows = spark.table("t_sharded")
+        .select(col("shard"), col("seq"), col("topic"), col("body"))
+        .collect()
+      q.stop()
+
+      assert(rows.length == 50)
+      // every topic lands wholly on its routed shard
+      assert(rows.filter(_.getString(2) == orders).forall(_.getInt(0) == 0))
+      assert(rows.filter(_.getString(2) == alerts).forall(_.getInt(0) == 1))
+      // per-shard FIFO: shard seqs are gapless 1..25 and the i-th seq
+      // carries the i-th posted body — arrival order, not just seq order
+      Seq(0, 1).foreach { sh =>
+        val inOrder = rows.filter(_.getInt(0) == sh).sortBy(_.getLong(1))
+        assert(inOrder.map(_.getLong(1)).toSeq == (1L to 25L))
+        inOrder.zipWithIndex.foreach { case (r, idx) =>
+          assert(r.getString(3) == s"""{"i":${idx + 1}}""",
+            s"shard $sh seq ${idx + 1} out of arrival order")
+        }
+      }
+    } finally {
+      WebhookQueue.stopServer()
+      WebhookQueue.init(1)
+    }
+  }
+
+  test("shard offsets round-trip through JSON and commit per shard") {
+    WebhookQueue.init(2)
+    try {
+      // in-process producer path: routing must send a topic to one
+      // stable shard
+      val shA = WebhookQueue.route("orders")
+      (1 to 5).foreach(i =>
+        assert(WebhookQueue.post("orders", s"""{"i":$i}""") == i))
+      assert(WebhookQueue.shard(shA).latest == 5L)
+      val other = (1 to 3).map(i =>
+        WebhookQueue.post(topicOn(1 - shA), s"""{"j":$i}"""))
+      assert(other == (1L to 3L))
+
+      val stream = new WebhookMicroBatchStream
+      val parts = stream
+        .planInputPartitions(stream.initialOffset(), stream.latestOffset())
+        .map(_.asInstanceOf[WebhookInputPartition])
+      assert(parts.map(_.shard).distinct.sorted.toSeq == Seq(0, 1))
+      // partitions are contiguous ascending ranges of one shard's seqs
+      Seq(0, 1).foreach { i =>
+        assert(parts.filter(_.shard == i).flatMap(_.rows.map(_._1)).toSeq ==
+          (1L to (if (i == shA) 5L else 3L)))
+      }
+      // offsets roundtrip through JSON (checkpoint shape)
+      val off = stream.latestOffset().asInstanceOf[WebhookOffset]
+      assert(stream.deserializeOffset(off.json()) == off)
+      // commit truncates each shard independently
+      stream.commit(WebhookOffset(if (shA == 0) Vector(2L, 1L) else Vector(1L, 2L)))
+      assert(WebhookQueue.shard(shA).slice(0L, Long.MaxValue)
+        .map(_._1).toSeq == (3L to 5L))
+      assert(WebhookQueue.shard(1 - shA).slice(0L, Long.MaxValue)
+        .map(_._1).toSeq == (2L to 3L))
+      stream.stop()
+    } finally WebhookQueue.init(1)
+  }
+
+  test("a checkpoint whose offset log holds {\"seq\":n} resumes at n") {
+    WebhookQueue.init(1)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_seq").toString
+    try {
+      // a reader that holds the queue back, so the rows below the resumed
+      // offset stay queued and a wrong resume would read them again
+      WebhookQueue.registerConsumer("holder")
+      (1 to 5).foreach(i => WebhookQueue.post("t", s"""{"i":$i}"""))
+      val (first, _) = runToEnd(raw().select("seq"), ckpt)
+      assert(first.flatMap(_._2).map(_.getLong(0)).sorted == (1L to 5L))
+      // rewrite the offset log as a single-queue checkpoint wrote it
+      val log = java.nio.file.Paths.get(ckpt, "offsets", "0")
+      val lines = java.nio.file.Files.readAllLines(log).asScala.toSeq
+      assert(lines.last == """{"seqs":[5]}""")
+      java.nio.file.Files.write(log, (lines.init :+ """{"seq":5}""").asJava)
+      java.nio.file.Files.deleteIfExists(log.resolveSibling(".0.crc"))
+      (6 to 8).foreach(i => WebhookQueue.post("t", s"""{"i":$i}"""))
+      val (resumed, _) = runToEnd(raw().select("seq"), ckpt)
+      assert(resumed.flatMap(_._2).map(_.getLong(0)).sorted == (6L to 8L))
+    } finally WebhookQueue.init(1)
+  }
+
+  test("a full shard answers 503 while another shard still accepts") {
+    WebhookQueue.init(4)
+    val port = WebhookQueue.startServer(0)
+    try {
+      val (full, open) = (topicOn(0), topicOn(1))
+      (1 to WebhookQueue.maxRetained).foreach(_ =>
+        assert(WebhookQueue.post(full, "{}") > 0))
+      assert(WebhookQueue.post(full, "{}") == -1L)
+      val client = HttpClient.newHttpClient()
+      def post(topic: String): Int = client.send(
+        HttpRequest.newBuilder(URI.create(
+          s"http://localhost:$port/webhook/$topic"))
+          .POST(HttpRequest.BodyPublishers.ofString("{}")).build(),
+        HttpResponse.BodyHandlers.ofString()).statusCode()
+      assert(post(full) == 503)
+      assert(post(open) == 200)
+      // a commit on the full shard frees it
+      WebhookQueue.shard(0).truncate(10L)
+      assert(post(full) == 200)
+    } finally {
+      WebhookQueue.stopServer()
+      WebhookQueue.init(1)
+    }
+  }
+
+  test("at 4 shards a torn WAL tail in one shard costs only that shard's tail") {
+    WebhookQueue.init(4)
+    val dir = java.nio.file.Files.createTempDirectory("graft_wal_shards")
+    try {
+      WebhookQueue.enableDurability(dir.toString)
+      (0 until 4).foreach(i =>
+        (1 to 3).foreach(k => WebhookQueue.post(topicOn(i), s"""{"i":$k}""")))
+      WebhookQueue.disableDurability()
+      WebhookQueue.clear()
+      // shard 0 logs in the directory itself, shard i in shard-i
+      assert(java.nio.file.Files.exists(dir.resolve("webhook.wal")))
+      (1 to 3).foreach(i => assert(
+        java.nio.file.Files.exists(dir.resolve(s"shard-$i/webhook.wal"))))
+      // a crash mid-append tears shard 2's last record
+      val wal = dir.resolve("shard-2/webhook.wal")
+      val lines = java.nio.file.Files.readString(wal).split("\n")
+      java.nio.file.Files.writeString(wal, lines.init.map(_ + "\n").mkString +
+        lines.last.take(lines.last.length / 2))
+      assert(WebhookQueue.enableDurability(dir.toString) == 4 * 3 - 1)
+      (0 until 4).foreach { i =>
+        assert(WebhookQueue.shard(i).slice(0L, Long.MaxValue).map(_._1).toSeq ==
+          (1L to (if (i == 2) 2L else 3L)), s"shard $i")
+      }
+    } finally WebhookQueue.init(1)
+  }
+
+  test("a WAL directory written at 4 shards is refused at 1") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_wal_n4").toString
+    val single = java.nio.file.Files.createTempDirectory("graft_wal_n1").toString
+    WebhookQueue.init(4)
+    try {
+      WebhookQueue.enableDurability(dir)
+      (0 until 4).foreach(i => WebhookQueue.post(topicOn(i), "{}"))
+      WebhookQueue.init(1)
+      val e = intercept[IllegalArgumentException](
+        WebhookQueue.enableDurability(dir))
+      assert(e.getMessage.contains("written with 4 shard(s)") &&
+        e.getMessage.contains("queue has 1"), e.getMessage)
+      // and a single-shard directory is refused at 4
+      WebhookQueue.enableDurability(single)
+      WebhookQueue.post("t", "{}")
+      WebhookQueue.init(4)
+      intercept[IllegalArgumentException](WebhookQueue.enableDurability(single))
+      // at its own shard count the directory recovers every shard
+      assert(WebhookQueue.enableDurability(dir) == 4)
+    } finally WebhookQueue.init(1)
+  }
+
+  test("at 4 shards dedupDeliveries drops a key repeated across shards") {
+    WebhookQueue.init(4)
+    try {
+      // one delivery posted on two topics that route to different shards:
+      // each shard sees the key first, so the marks cannot decide
+      WebhookQueue.post(topicOn(0), """{"i":1}""", "k")
+      WebhookQueue.post(topicOn(1), """{"i":1}""", "k")
+      WebhookQueue.post(topicOn(1), """{"i":2}""", "k2")
+      assert((0 to 1).flatMap(i => WebhookQueue.shard(i)
+        .slice(0L, Long.MaxValue).map(e => (i, e._5, e._6))) ==
+        Seq((0, "k", true), (1, "k", true), (1, "k2", true)))
+      assert(!WebhookSource.marksCover(raw().schema, "2 hours"))
+      val (batches, q) = runToEnd(StreamOps.dedupDeliveries(raw()))
+      assert(batches.flatMap(_._2).map(_.getAs[String]("delivery_key"))
+        .sorted == Seq("k", "k2"), s"batches: $batches")
+      assert(q.recentProgress.exists(_.stateOperators.nonEmpty),
+        "the key-only dedup needs its state store above one shard")
+    } finally WebhookQueue.init(1)
   }
 }
