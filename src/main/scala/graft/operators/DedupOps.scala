@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 import graft.Tables
 
 /** Near-duplicate detection over `documents` — the LLM-data-pipeline dedup
@@ -1202,48 +1203,114 @@ object DedupOps {
       .orderBy($"source")
   }
 
-  /** Distributed connected components by min-label propagation: every doc
-    * starts labeled with its own id; each round, every doc takes the min
-    * label across itself and its neighbours (one shuffle join keyed on the
-    * edge head + one min-aggregate per round); fixpoint when no label
-    * changes. Labels only ever decrease, so the per-round SUM(label) is a
-    * strictly decreasing convergence witness — one scalar action per
-    * round, no row-level diff join.
-    *
-    * Rounds = graph diameter. Near-dup components are template families —
-    * dense blobs of diameter ≲ 4 (the graded corpus converges in 3) — so
-    * the round count is small and independent of corpus size; each round
-    * shuffles only the 2·|pairs| edge rows and |clustered docs| label rows,
-    * never the corpus. A pathological long-chain graph (diameter ≫ rounds)
-    * AUTO-SWITCHES after `switchRounds` rounds to the O(log² n)-round
-    * large-star/small-star alternation ([[starContract]]) instead of
-    * crawling diameter-many rounds or dying at a guard — min-label stays
-    * the fast path for the realistic regime, star contraction the
-    * diameter-proof one. Per-round `localCheckpoint` (lazy) cuts the
-    * growing lineage so round N's plan doesn't replay rounds 1..N−1;
-    * superseded checkpoints lose their last reference and the
-    * ContextCleaner reclaims them. On a cluster, `checkpoint` against
-    * the fault-tolerant checkpoint dir is the same seam.
+  /** Directed edges one loop task takes: the distributed CC loop runs
+    * `nEdges / EdgesPerTask + 1` partitions wide, and [[clusterPairs]]
+    * finishes a graph below this bound (fewer than 25,000 pairs, about
+    * 400 KB of BIGINT ids) on the driver instead.
     */
-  private[graft] def clusterPairs(s: SparkSession, pairs: DataFrame,
-                                  switchRounds: Int = 20,
-                                  labelJump: Boolean = true): DataFrame = {
+  private val EdgesPerTask = 50000L
+
+  /** Connected components of a pair graph: one `(cluster_id, doc_id,
+    * keep)` row per node that appears in a pair, labelled with its
+    * component's minimum id, `keep` on that member, ordered by
+    * (cluster_id, doc_id). Column types follow the pair list's id type.
+    *
+    * The pair list is lazily checkpointed and counted once. A graph below
+    * [[EdgesPerTask]] directed edges is collected and finished by
+    * [[unionFindComponents]], so a call runs 2 jobs: the count and the
+    * collect. Below that bound the distributed loop runs every stage on
+    * one partition anyway, yet each of its rounds ends in an action; on
+    * the semantic tier's 920-pair graph at sf0.1 that was 12 rounds and
+    * 15 jobs, whose barriers cost more than the work. Larger graphs, and
+    * ids that are not BIGINT, take [[minLabelComponents]].
+    */
+  private[graft] def clusterPairs(s: SparkSession, pairs: DataFrame): DataFrame = {
+    // The pair pipeline is checkpointed BEFORE any fan-out (the loop's
+    // symmetrizing union reads it twice): the count below, needed by
+    // both paths, materializes it in a single job.
+    val p = pairs.toDF("a", "b").localCheckpoint(false)
+    val nEdges = p.count() * 2
+    if (nEdges < EdgesPerTask &&
+        Seq("a", "b").forall(c => p.schema(c).dataType == LongType))
+      unionFindComponents(s, p)
+    else minLabelComponents(s, p, nEdges).rows
+  }
+
+  /** [[clusterPairs]] for a small BIGINT pair list `p` (columns a, b), on
+    * the driver: a union-find in which the smaller root always wins, so
+    * each root is its component's minimum id, the label
+    * [[minLabelComponents]] converges to. Rows, order and schema equal
+    * those of its min-label loop.
+    */
+  private def unionFindComponents(s: SparkSession, p: DataFrame): DataFrame = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    p.collect().foreach { row =>
+      val (a, b) = (row.getLong(0), row.getLong(1))
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val rows = parent.keys.toArray.map(d => (find(d), d)).sorted
+      .map { case (c, d) => Row(c, d, c == d) }
+    val idNullable = p.schema("a").nullable || p.schema("b").nullable
+    // the loop's labels come out of min(), which is nullable; an empty
+    // graph runs no round and keeps the nullability of its ids
+    val labelNullable = rows.nonEmpty || idNullable
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("cluster_id", LongType, labelNullable),
+      StructField("doc_id", LongType, idNullable),
+      StructField("keep", BooleanType, labelNullable))))
+  }
+
+  /** A [[minLabelComponents]] run: the [[clusterPairs]] rows, the
+    * min-label rounds it ran, and whether [[starContract]] finished it.
+    */
+  private[graft] final case class CcLoop(rows: DataFrame, rounds: Int,
+                                         starFinish: Boolean)
+
+  /** Distributed connected components by min-label propagation, the
+    * [[clusterPairs]] path for graphs of [[EdgesPerTask]] directed edges
+    * or more. `p` is the pair list as (a, b), lazily checkpointed, and
+    * `nEdges` twice its row count (the count materializes `p`).
+    *
+    * Every doc starts labeled with the min of itself and its neighbours;
+    * each round, every doc takes the min label across itself, its
+    * neighbours and its label's label (one shuffle join keyed on the edge
+    * head, one on the label, and one min-aggregate per round); fixpoint
+    * when no label changes. Labels only ever decrease, so the per-round
+    * SUM(label) is a strictly decreasing convergence witness — one scalar
+    * action per round, no row-level diff join.
+    *
+    * Without the label jump the round count is the graph's diameter; the
+    * jump cuts it by a margin the graph decides (see the loop). Each round
+    * shuffles only the 2·|pairs| edge rows and |clustered docs| label
+    * rows, never the corpus. A graph not converged after `switchRounds`
+    * rounds is handed to the large-star/small-star alternation
+    * ([[starContract]]), whose proven bound is O(log² n) alternations
+    * whatever the diameter, instead of crawling on or dying at a guard.
+    * Per-round `localCheckpoint` (lazy) cuts the growing lineage so round
+    * N's plan doesn't replay rounds 1..N−1; superseded checkpoints lose
+    * their last reference and the ContextCleaner reclaims them. On a
+    * cluster, `checkpoint` against the fault-tolerant checkpoint dir is
+    * the same seam.
+    */
+  private[graft] def minLabelComponents(s: SparkSession, p: DataFrame,
+                                        nEdges: Long,
+                                        switchRounds: Int = 20,
+                                        labelJump: Boolean = true): CcLoop = {
     import s.implicits._
     // LAZY localCheckpoint throughout: the per-round convergence-sum action
     // materializes the checkpoint in the SAME job (eager would pay a
     // separate materialization job per round — measured ~2× the loop cost
-    // at sf0.1's ~5 rounds).
-    //
-    // The pair pipeline is checkpointed BEFORE the symmetrizing union:
-    // otherwise the (expensive — full ngram dedup) `pairs` plan appears in
-    // BOTH union branches and ReuseExchange is the only thing standing
-    // between the loop and paying it twice. The count() below — needed
-    // anyway to size the loop's parallelism — is the materializing action:
-    // it runs over p's own RDD (single branch, so the pair pipeline
-    // executes exactly once), and the union then reads the checkpointed
-    // rows.
-    val p = pairs.toDF("a", "b").localCheckpoint(false)
-    val nEdges = p.count() * 2
+    // at sf0.1).
     val edges0 = p.select(col("a").as("src"), col("b").as("dst"))
       .union(p.select(col("b").as("src"), col("a").as("dst")))
     // Loop parallelism follows the EDGE count, not the session's
@@ -1251,11 +1318,10 @@ object DedupOps {
     // corpus, and a 32-task exchange over ~10³ rows is pure scheduling
     // overhead (the coalescing AQE would apply per-stage on a cluster; AQE
     // is off on the local harness). Edges and labels are hash-partitioned
-    // on their join keys at that width, so each round's join adds NO
-    // exchange and the one repartition before the min-aggregate is the
-    // round's only shuffle.
+    // on their join keys at that width, so each round's edge join adds NO
+    // exchange.
     val sp = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val width = math.max(1, math.min(sp, (nEdges / 50000L + 1L).toInt))
+    val width = math.max(1, math.min(sp, (nEdges / EdgesPerTask + 1L).toInt))
     val edges = edges0.repartition(width, $"dst").localCheckpoint(false)
     // Initial labels FUSE the first propagation round: every node's label
     // starts at min(itself, its neighbours) — one aggregate over the
@@ -1276,22 +1342,20 @@ object DedupOps {
       val hopped = edges.join(labels, $"dst" === $"doc_id")
         .select($"src".as("doc_id"), $"cluster_id")
         .union(labels)
-      // POINTER JUMP (r20): also take min with label(label(v)) — the
-      // classic pointer-doubling step. Each round the distance a label
-      // has travelled DOUBLES instead of growing by one, so the loop
-      // converges in O(log diameter) rounds instead of diameter. The
-      // fixpoint is unchanged: the jump branch only ever proposes the
+      // POINTER JUMP (r20): also take min with label(label(v)), so a label
+      // can travel more than one hop per round. It is not true pointer
+      // doubling (a node's min-label source can sit anywhere in its
+      // ball), so it is a heuristic round cut, not a proven bound:
+      // on the semantic tier's graph at sf0.1 it took rounds 16 → 12 and
+      // jobs per call 19 → 15 (CcExp, TIMEQ_r20_cc.json), at the price of
+      // one extra cluster_id-keyed exchange of the label table per round.
+      // The fixpoint is unchanged: the jump branch only ever proposes the
       // label of another node in the same component (labels start as
       // component member ids and only decrease), the combined min is
       // still monotone, and any fixpoint of the combined operator is a
       // fixpoint of the plain edge-hop (the union includes it), which
-      // reaches the component min by the standard path argument — so
-      // row identity to the pre-r20 loop is structural, not empirical.
-      // Measured (CcExp, sf0.1): the semantic pair graph at the graded
-      // 0.4 threshold has diameter ~16 — 17 sequential one-hop rounds,
-      // ~85% of every semantic-family row's wall — while the jump form
-      // closes it in ~5 rounds. Cost: one extra cluster_id-keyed
-      // exchange of the (tiny, edge-bounded) label table per round.
+      // reaches the component min by the standard path argument — so row
+      // identity to the plain loop is structural, not empirical.
       val jumped =
         if (!labelJump) hopped
         else {
@@ -1308,15 +1372,12 @@ object DedupOps {
       prev = cur
       labels = next
     }
-    // measurement seam (CcExp): report the convergence round count
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(s"ccDebug rounds=$round jump=$labelJump nEdges=$nEdges")
     // diameter > switchRounds: hand the original (checkpointed) pair list
     // to the diameter-proof alternation instead of crawling on
     val resolved = if (done) labels else starContract(s, p)
-    resolved
+    CcLoop(resolved
       .select($"cluster_id", $"doc_id", ($"doc_id" === $"cluster_id").as("keep"))
-      .orderBy($"cluster_id", $"doc_id")
+      .orderBy($"cluster_id", $"doc_id"), round, !done)
   }
 
   /** Large-star/small-star alternation (Kiveris et al., "Connected

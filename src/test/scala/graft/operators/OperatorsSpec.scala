@@ -1047,32 +1047,115 @@ class OperatorsSpec extends SparkSpec {
       (1L, 4L, false), (5L, 5L, true), (5L, 6L, false)))
   }
 
-  test("pointer-jump loop equals the plain min-label loop (r20)") {
-    import spark.implicits._
-    // Graphs chosen to stress the label-jump branch: paths with ids laid
-    // WITH and AGAINST the pointer direction, a shuffled-id path (many
-    // local-minimum basins — the regime where the jump contracts least),
-    // and a seeded random multigraph. The 40-node paths also cross the
-    // switchRounds=20 star-contraction seam for at least one form, so
-    // the equality covers the fallback path too.
+  /** The distributed CC loop over `pairs`, handed the checkpointed pair
+    * list and the edge count the way [[DedupOps.clusterPairs]] hands them.
+    */
+  private def distributedCc(pairs: org.apache.spark.sql.DataFrame,
+                            switchRounds: Int = 20,
+                            labelJump: Boolean = true): DedupOps.CcLoop = {
+    val p = pairs.toDF("a", "b").localCheckpoint(false)
+    DedupOps.minLabelComponents(spark, p, p.count() * 2, switchRounds,
+      labelJump)
+  }
+
+  private def ccRows(df: org.apache.spark.sql.DataFrame)
+  : Seq[(Long, Long, Boolean)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+      .toSeq
+
+  // Graphs chosen to stress the label-jump branch: paths with ids laid
+  // WITH and AGAINST the pointer direction, a shuffled-id path (many
+  // local-minimum basins — the regime where the jump contracts least),
+  // and a seeded random multigraph. The 40-node paths also cross the
+  // switchRounds=20 star-contraction seam for the plain form, so the
+  // pointer-jump equality covers the fallback path too.
+  private val loopGraphs: Seq[Seq[(Long, Long)]] = {
     val rnd = new scala.util.Random(7)
     val shuffled = rnd.shuffle((0L until 60L).toVector)
-    val graphs: Seq[Seq[(Long, Long)]] = Seq(
+    Seq(
       (0L until 40L).map(i => (i, i + 1)),         // ascending-id path
       (0L until 40L).map(i => (40L - i, 39L - i)), // descending-id path
       shuffled.sliding(2).map(w => (w(0), w(1))).toSeq, // shuffled-id path
       Seq.fill(80)((math.abs(rnd.nextLong()) % 50L,
         math.abs(rnd.nextLong()) % 50L)).filter(p => p._1 != p._2))
-    for (g <- graphs) {
+  }
+
+  test("pointer-jump loop equals the plain min-label loop (r20)") {
+    import spark.implicits._
+    for (g <- loopGraphs) {
       val pairs = g.toDF("da", "db")
-      val plain = DedupOps.clusterPairs(spark, pairs, labelJump = false)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-        .sorted.toSeq
-      val jump = DedupOps.clusterPairs(spark, pairs)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-        .sorted.toSeq
+      val plain = ccRows(distributedCc(pairs, labelJump = false).rows)
+      val jump = ccRows(distributedCc(pairs).rows)
       assert(jump == plain && jump.nonEmpty)
     }
+  }
+
+  test("union-find finish equals the distributed loop in rows and schema") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val extra: Seq[Seq[(Long, Long)]] = Seq(
+      (1L to 30L).filter(_ != 12L).map(i => (12L, i)),   // star, mid-id hub
+      Seq((10L, 11L), (11L, 12L), (20L, 21L), (32L, 30L), (30L, 31L),
+        (31L, 32L), (40L, 5L)),                           // disconnected
+      Seq((1L, 1L), (2L, 3L), (3L, 3L), (7L, 7L)),        // self-loops
+      Seq((1L, 2L), (2L, 1L), (1L, 2L), (4L, 3L), (3L, 4L), (2L, 3L),
+        (9L, 8L), (8L, 9L), (8L, 9L)),                    // dups, reversed
+      Seq.empty)
+    val nullableIds = StructType(Seq(StructField("da", LongType, true),
+      StructField("db", LongType, true)))
+    // nullable-id copies (as a parquet source types them) of the graphs
+    // that converge in a few rounds only: the loop's planning time per
+    // round grows with the round count, and on nullable ids the 22
+    // rounds of the shuffled path spend minutes in the optimizer
+    val inputs = (loopGraphs ++ extra).map(g => (g, g.toDF("da", "db"))) ++
+      (loopGraphs.takeRight(1) ++ extra).map(g =>
+        (g, spark.createDataFrame(g.toDF("da", "db").rdd, nullableIds)))
+    for ((g, pairs) <- inputs) {
+      val local = DedupOps.clusterPairs(spark, pairs)
+      // no graph here needs 64 rounds, so the reference is the min-label
+      // fixpoint itself (star contraction's rows are equal, spec below,
+      // but it types every column nullable)
+      val run = distributedCc(pairs, switchRounds = 64)
+      assert(!run.starFinish)
+      assert(local.schema == run.rows.schema, s"graph $g")
+      // collected in order: the local rows come out ordered like the
+      // loop's (cluster_id, doc_id) sort
+      assert(ccRows(local) == ccRows(run.rows), s"graph $g")
+    }
+  }
+
+  test("clusterPairs finishes a small checkpointed pair list in 2 jobs") {
+    val pairs = DedupOps.ngramJaccard(spark, sfTest)
+      .select(col("da"), col("db")).localCheckpoint()
+    var rows = Seq.empty[(Long, Long, Boolean)]
+    // the pair count that sizes the loop, and one collect; the result is
+    // a local relation, so reading it back adds none
+    val (jobs, _) = costOf {
+      rows = ccRows(DedupOps.clusterPairs(spark, pairs))
+    }
+    assert(jobs <= 2, s"$jobs jobs")
+    // multi-doc components exist, so the union-find did real merges
+    assert(rows.groupBy(_._1).exists(_._2.size >= 3))
+  }
+
+  test("distributed CC loop round counts on a 41-node path") {
+    import spark.implicits._
+    // path 0-1-…-40: the fused init moves each label one hop; the jump
+    // doubles the distance a label travels per round, so 6 rounds reach
+    // node 40 and a 7th sees no change. Without the jump the loop needs a
+    // round per remaining hop and hits the 20-round switch, and star
+    // contraction finishes the graph.
+    val path = (0L until 40L).map(i => (i, i + 1)).toDF("da", "db")
+    val jump = distributedCc(path)
+    assert((jump.rounds, jump.starFinish) == ((7, false)))
+    val plain = distributedCc(path, labelJump = false)
+    assert((plain.rounds, plain.starFinish) == ((20, true)))
+    // an 11-node path converges unaided: 9 rounds after the init, then 1
+    // that sees no change
+    val short = distributedCc(path.filter($"da" < 10L), labelJump = false)
+    assert((short.rounds, short.starFinish) == ((10, false)))
+    val want = (0L until 41L).map(d => (0L, d, d == 0L))
+    assert(ccRows(jump.rows) == want && ccRows(plain.rows) == want)
   }
 
   test("dedup clusters equal a union-find over the ngram pair list") {
@@ -1110,9 +1193,9 @@ class OperatorsSpec extends SparkSpec {
     // the auto-switch must land the same component-min labels in O(log n)
     // alternations
     val path = (0L until 999L).map(i => (i, i + 1)).toDF("da", "db")
-    val got = DedupOps.clusterPairs(spark, path, switchRounds = 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-    assert(got == (0L until 1000L).map(d => (0L, d, d == 0L)))
+    val run = distributedCc(path, switchRounds = 5)
+    assert(run.starFinish && run.rounds == 5)
+    assert(ccRows(run.rows) == (0L until 1000L).map(d => (0L, d, d == 0L)))
   }
 
   test("star contraction equals min-label propagation on the fixture graph") {
@@ -1122,7 +1205,7 @@ class OperatorsSpec extends SparkSpec {
     val viaStars = DedupOps.starContract(spark, pairs)
       .select($"cluster_id", $"doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val viaLabels = DedupOps.clusterPairs(spark, pairs).collect()
+    val viaLabels = distributedCc(pairs).rows.collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(viaStars == viaLabels && viaStars.nonEmpty)
   }
